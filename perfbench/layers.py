@@ -141,6 +141,5 @@ def aggregate(path, cores):
         "warehouse.write_amp": written / source if source else 0.0,
         "warehouse.table_mb": mean([s["table_bytes"] for s in last_batch]) / mb,
         "warehouse.table_files": mean([s["table_files"] for s in last_batch]),
-        "trace.pass_s": statistics.median([p["dur_s"] for p in passes]) if passes else 0.0,
         "trace.unattributed_jobs": float(unattributed),
     }

@@ -28,11 +28,6 @@ import graft.pipelines.CivicPipeline
   * Arguments are `--name value` pairs; `run.py` documents them. */
 object Harness {
   val Cores = 4
-  /** Timed passes run until `--seconds` have elapsed and at least this
-    * many have finished. The first pass after the warm-up is still
-    * slower than later ones; a fixed minimum keeps the pass count, and
-    * so the medians, from flipping between runs. */
-  val MinPasses = 2
   val json = new ObjectMapper()
 
   final class Args(m: Map[String, String]) {
@@ -131,6 +126,48 @@ object Harness {
 
   def p50(xs: Seq[Double]): Double = quantile(xs, 0.5)
 
+  /** The timed passes of a run and the operation latencies in them.
+    * The client runs whole passes until their summed wall time reaches
+    * `--seconds`; the pass that crosses the mark counts by the share of
+    * it inside that window, every earlier pass counts fully. Passes of a
+    * fresh JVM keep getting faster as the JIT warms, and the number that
+    * fit steps by one as the host runs faster or slower, so a median
+    * over whole passes jumps between runs where these weighted means
+    * move smoothly. */
+  final class Window(seconds: Double) {
+    val passes = scala.collection.mutable.ArrayBuffer[Double]()
+    /** (pass index, latency) of every operation that passed its checks */
+    val samples = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
+
+    def open: Boolean = passes.sum < seconds
+
+    def weights: IndexedSeq[Double] = {
+      var before = 0.0
+      passes.toIndexedSeq.map { p =>
+        val w = math.max(0.0, math.min(1.0, (seconds - before) / p))
+        before += p
+        w
+      }
+    }
+
+    /** `pass_s`, the weighted mean pass time, and `op_geomean_s`, the
+      * weighted geometric mean of operation latencies: it moves with
+      * each operation and weighs a relative change to a cheap operation
+      * like one to a costly operation, where a pooled median of
+      * operations with distinct costs jumps between their levels. */
+    def metrics: Seq[Metric] = {
+      val w = weights
+      def mean(xs: Seq[(Double, Double)]): Double = {
+        val total = xs.map(_._1).sum
+        if (total > 0) xs.map { case (wi, x) => wi * x }.sum / total else 0.0
+      }
+      Seq(
+        Metric("pass_s", mean(w.zip(passes)), "s", passes.size),
+        Metric("op_geomean_s", math.exp(mean(samples.toSeq.map { case (i, l) => w(i) -> math.log(l) })),
+          "s", samples.size))
+    }
+  }
+
   /** Linear-interpolated quantile; 0 for an empty sample, which only a
     * run whose every operation failed produces. */
   def quantile(xs: Seq[Double], q: Double): Double = if (xs.isEmpty) 0.0 else {
@@ -208,8 +245,8 @@ object Harness {
 import Harness._
 
 /** fixed_cost and kernel_bound: an untimed warm-up pass that checks each
-  * query's fingerprint against the pinned reference, then timed passes
-  * in seed order. */
+  * query's fingerprint against the pinned reference and one that runs
+  * the timed path, then timed passes in seed order. */
 final class Queries(spark: SparkSession, args: Harness.Args, spec: JsonNode,
     spans: Spans, out: Outcomes, traced: Boolean, lsh: Option[LshBucketMetrics]) {
 
@@ -251,15 +288,26 @@ final class Queries(spark: SparkSession, args: Harness.Args, spec: JsonNode,
       recorded.foreach { case (k, v) => node.put(k, v) }
       Files.writeString(Paths.get(args("record-file")), json.writeValueAsString(node))
     }
+    // the collect above does not run the noop-write path; one untimed
+    // pass through it keeps the JIT's first compiles of that path out of
+    // the window
+    spans("pass", "warmup-write") { _ =>
+      for (name <- names) spans("op", name) { op =>
+        out.attempted += 1
+        op.attrs("timed") = false
+        try build(name).write.format("noop").mode("overwrite").save()
+        catch { case e: Exception => out.fail(s"$name: ${e.getClass.getName}: ${e.getMessage}") }
+        drain()
+      }
+    }
 
     val seconds = args("seconds").toDouble
     val seed = args("seed").toLong
-    val passTimes = scala.collection.mutable.ArrayBuffer[Double]()
+    val window = new Window(seconds)
     val latencies = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    val t0 = System.nanoTime()
     var firstTimedMs = 0L
     var pass = 0
-    while (pass < MinPasses || (System.nanoTime() - t0) / 1e9 < seconds) {
+    while (window.open) {
       val order = new Random(seed * 1000003L + pass).shuffle(names)
       val lsh0 = lshTotals(lsh)
       val p = spans("pass", s"pass$pass") { ps =>
@@ -272,7 +320,9 @@ final class Queries(spark: SparkSession, args: Harness.Args, spec: JsonNode,
           try {
             val df = spans("phase", "build")(_ => build(name))
             spans("phase", "action")(_ => df.write.format("noop").mode("overwrite").save())
-            latencies += name -> (System.nanoTime() - op.startNs) / 1e9
+            val s = (System.nanoTime() - op.startNs) / 1e9
+            latencies += name -> s
+            window.samples += pass -> s
           } catch { case e: Exception => out.fail(s"$name: ${e.getClass.getName}: ${e.getMessage}") }
           val (c1, n1) = codegen()
           op.attrs("codegen_compiles") = c1 - c0
@@ -280,7 +330,7 @@ final class Queries(spark: SparkSession, args: Harness.Args, spec: JsonNode,
         }
         ps
       }
-      passTimes += p.seconds
+      window.passes += p.seconds
       if (traced) {
         drain()
         val (rdds, bytes) = pinState(spark)
@@ -290,10 +340,7 @@ final class Queries(spark: SparkSession, args: Harness.Args, spec: JsonNode,
       }
       pass += 1
     }
-    val metrics = Seq(
-      Metric("pass_s", p50(passTimes.toSeq), "s", passTimes.size),
-      Metric("op_p50_s", p50(latencies.map(_._2).toSeq), "s", latencies.size)) ++
-      latency("query", latencies.map(_._2).toSeq)
+    val metrics = window.metrics ++ latency("query", latencies.map(_._2).toSeq)
     Result(metrics, firstTimedMs, Nil, latencies.toSeq)
   }
 }
@@ -301,9 +348,9 @@ final class Queries(spark: SparkSession, args: Harness.Args, spec: JsonNode,
 /** civic_ingest: the roster is loaded and written once, then the seeded
   * batches are ingested in order into one growing bills/vote_events
   * warehouse. The first [[Civic.WarmupBatches]] batches are the untimed
-  * warm-up (the first creates the tables, the second takes the merge
-  * path); each later batch is one timed pass. After every batch the
-  * table row counts and the read-back tallies are checked against the
+  * warm-up (the first creates the tables, the later ones take the merge
+  * path while the JIT warms); each later batch is one timed pass. After
+  * every batch the table row counts and the read-back tallies are checked against the
   * generator's manifest; at the end both tables must equal a one-shot
   * ingest of the latest version of every document ingested so far. */
 final class Civic(spark: SparkSession, args: Harness.Args,
@@ -431,15 +478,13 @@ final class Civic(spark: SparkSession, args: Harness.Args,
       batches.take(Civic.WarmupBatches).foreach(b => batch(b, timed = false))
     }
     val seconds = args("seconds").toDouble
-    val passTimes = scala.collection.mutable.ArrayBuffer[Double]()
+    val window = new Window(seconds)
     val ingest = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     val reads = scala.collection.mutable.ArrayBuffer[Double]()
     var docs = 0L
     var firstTimedMs = 0L
-    val t0 = System.nanoTime()
     var next = Civic.WarmupBatches
-    while (next < batches.size &&
-        (next - Civic.WarmupBatches < MinPasses || (System.nanoTime() - t0) / 1e9 < seconds)) {
+    while (next < batches.size && window.open) {
       val b = batches(next)
       val lsh0 = lshTotals(lsh)
       val p = spans("pass", s"pass${next - Civic.WarmupBatches}") { ps =>
@@ -447,10 +492,11 @@ final class Civic(spark: SparkSession, args: Harness.Args,
         if (firstTimedMs == 0L) firstTimedMs = System.currentTimeMillis()
         batch(b, timed = true).foreach { case (i, r) =>
           ingest += b.get("dir").asText -> i; reads += r; docs += b.get("docs").asLong
+          window.samples += window.passes.size -> i
         }
         ps
       }
-      passTimes += p.seconds
+      window.passes += p.seconds
       if (traced) {
         val (rdds, bytes) = pinState(spark)
         val lsh1 = lshTotals(lsh)
@@ -482,9 +528,7 @@ final class Civic(spark: SparkSession, args: Harness.Args,
       }
     }
     val ingestSeconds = ingest.map(_._2).sum
-    val metrics = Seq(
-      Metric("pass_s", p50(passTimes.toSeq), "s", passTimes.size),
-      Metric("op_p50_s", p50(ingest.map(_._2).toSeq), "s", ingest.size)) ++
+    val metrics = window.metrics ++
       latency("ingest", ingest.map(_._2).toSeq) ++ latency("readback", reads.toSeq) ++
       Seq(Metric("docs_per_s", if (ingestSeconds > 0) docs / ingestSeconds else 0.0, "docs/s", ingest.size))
     Result(metrics, firstTimedMs, layer, ingest.toSeq)
@@ -511,5 +555,5 @@ final class Civic(spark: SparkSession, args: Harness.Args,
 }
 
 object Civic {
-  val WarmupBatches = 2
+  val WarmupBatches = 3
 }
