@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** The graded SF dir — the ONE constant behind both the
     * SPARK_GRAFT_SF_DIR default and the "is this a full default run"
@@ -36,30 +35,11 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // best-of-n per query: a single pass is hostage to transient external
     // load (round 1's driver bench ran 3× inflated under a loaded host);
     // the min of n passes is the machine-capability number
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // SPARK_GRAFT_MASTER: same cluster-rehearsal override as Verify's —
-    // lets the lane price the surface under local-cluster[...] with
-    // real executor processes and network-path shuffle.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, so it must ride the builder: the default 100-entry
-      // whole-stage-codegen class cache thrashes across this surface's
-      // 227 queries × dozens of unique stages, so every best-of-n pass
-      // re-runs janino on every stage (~50-300 ms each) — a fixed
-      // driver-side tax the guide's §1.2 step-2 bucket. Sized to hold
-      // the whole surface's generated classes; scale-independent (the
-      // cache is per-JVM and keyed on generated source, and executors
-      // at cluster scale benefit identically).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional session-conf overrides for benching deployment knobs,
     // e.g. SPARK_GRAFT_CONF=spark.graft.pin.alignedLayout=true.

@@ -2,7 +2,6 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Graph, Pin}
@@ -94,13 +93,8 @@ object ChaosKill {
         "by task retry, proving nothing (use pr/cc for the negative " +
         "control)")
 
-    val master =
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,4,3072]")
-    val spark = SparkSession.builder()
-      .master(master)
+    val spark = Session.builder(defaultMaster = "local-cluster[2,4,3072]")
       .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (mode == "reliable")
@@ -248,7 +242,7 @@ object ChaosKill {
     }
     // one machine-readable line for the lane script
     println(s"""{"mode":"$mode","kernel":"$kernel","target":"$target",""" +
-      s""""master":"${esc(master)}",""" +
+      s""""master":"${esc(spark.sparkContext.master)}",""" +
       s""""iterations":$iterations,"baselineSec":${"%.1f".format(baselineSec)},""" +
       s""""baselineStages":$baselineStages,"killAtStage":$killAt,""" +
       s""""killedSec":${"%.1f".format(killedSec)},"killedPid":${killedPid.get},""" +

@@ -102,10 +102,17 @@ object GraftExtensions {
     "st_area" -> geoUdf(graft.geo.GeoFunctions.areaSqlFn,
       org.apache.spark.sql.types.DoubleType, "st_area") _)
 
-  /** Register every function into an existing session's catalog. */
-  def install(spark: SparkSession): Unit =
+  /** Register every function into an existing session's catalog.
+    * Idempotent: a name whose registered builder is already this
+    * registry's own is skipped, so repeated installs (and installs on a
+    * session built with the extension) replace nothing. A Spark
+    * built-in of the same name is still replaced. */
+  def install(spark: SparkSession): Unit = {
+    val functions = spark.sessionState.functionRegistry
     registry.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!functions.lookupFunctionBuilder(FunctionIdentifier(name))
+          .exists(_ eq builder))
+        functions.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

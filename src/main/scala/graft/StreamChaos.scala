@@ -3,7 +3,6 @@ package graft
 import java.security.MessageDigest
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.{EventPipeline, FunnelAdvance, TypedEvent}
@@ -41,13 +40,8 @@ object StreamChaos {
     val batches = args.lift(0).map(_.toInt).getOrElse(30)
     val rowsPerBatch = args.lift(1).map(_.toInt).getOrElse(5000)
 
-    val master =
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,4,3072]")
-    val spark = SparkSession.builder()
-      .master(master)
+    val spark = Session.builder(defaultMaster = "local-cluster[2,4,3072]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
@@ -146,7 +140,7 @@ object StreamChaos {
         (false, false, 0L,
           s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")
     }
-    println(s"""{"mode":"stream","master":"${esc(master)}",""" +
+    println(s"""{"mode":"stream","master":"${esc(spark.sparkContext.master)}",""" +
       s""""batches":$batches,"rowsPerBatch":$rowsPerBatch,""" +
       s""""baselineSec":${"%.1f".format(baselineSec)},""" +
       s""""killedSec":${"%.1f".format(killedSec)},"killedPid":${killedPid.get},""" +

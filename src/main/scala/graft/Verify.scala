@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,20 +18,7 @@ object Verify {
       .filter(_.nonEmpty)
     val excludes = terms.toSeq.flatten
       .filter(_.startsWith("!")).map(_.drop(1)).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the cluster-rehearsal lane
-    // (tools/cluster_verify.sh) run this same dump under a
-    // local-cluster[...] master with real multi-process executors;
-    // static confs (spark.executor.extraClassPath,
-    // spark.graft.checkpoint.dir, ...) ride -Dspark.* system
-    // properties, which SparkConf picks up below builder options.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -203,21 +203,8 @@ object DedupQueries {
         Dedup.minHashPairs(corpus, "doc_id", "text",
           k = 32, bands = 8, shingleLen = 3, threshold = 0.5)
           .select(col("a_id"), col("b_id")))
-      // one left-join aggregation for (tp, n_lsh) — see knnIndexAudit's
-      // round-15 note; truth pairs are unique (a_id, b_id)
-      val tp = lsh
-        .join(truth.withColumn("__t", lit(1L)), Seq("a_id", "b_id"), "left")
-        .agg(coalesce(sum(col("__t")), lit(0L)).as("tp"),
-          count(lit(1)).as("n_lsh"))
-      val nT = truth.agg(count(lit(1)).as("n_truth"))
-      tp.crossJoin(nT)
-        .select(col("n_truth"), col("n_lsh"), col("tp"),
-          (col("n_lsh") - col("tp")).as("fp"),
-          (col("n_truth") - col("tp")).as("fn"),
-          expr("CASE WHEN n_lsh = 0 THEN 0 ELSE (tp * 1000000) div n_lsh END")
-            .as("precision_micro"),
-          expr("CASE WHEN n_truth = 0 THEN 0 ELSE (tp * 1000000) div n_truth END")
-            .as("recall_micro"))
+      Audit.score(truth, lsh)
+        .withColumnRenamed("n_found", "n_lsh")
         .orderBy(col("n_truth"))
     }),
 
@@ -291,26 +278,8 @@ object DedupQueries {
         () => Dedup.embeddingNearDupsSrp(corpus, "vec_id", "embedding",
           threshold = 0.999, bits = 32, bands = 4)
           .select(col("a_id"), col("b_id")))
-      def score(method: String, f: DataFrame): DataFrame = {
-        // one left-join aggregation instead of semi-join + two count
-        // aggs + two crossJoins (round 15 — see knnIndexAudit's note;
-        // truth pairs are unique (a_id, b_id) by construction)
-        val tp = f
-          .join(truth.withColumn("__t", lit(1L)), Seq("a_id", "b_id"), "left")
-          .agg(coalesce(sum(col("__t")), lit(0L)).as("tp"),
-            count(lit(1)).as("n_found"))
-        val nT = truth.agg(count(lit(1)).as("n_truth"))
-        tp.crossJoin(nT)
-          .select(lit(method).as("method"), col("n_truth"), col("n_found"),
-            col("tp"), (col("n_found") - col("tp")).as("fp"),
-            (col("n_truth") - col("tp")).as("fn"),
-            expr("CASE WHEN n_found = 0 THEN 0 ELSE (tp * 1000000) div n_found END")
-              .as("precision_micro"),
-            expr("CASE WHEN n_truth = 0 THEN 0 ELSE (tp * 1000000) div n_truth END")
-              .as("recall_micro"))
-      }
-      score("ivf", ivfFound)
-        .unionByName(score("srp", srpFound))
+      Audit.score("ivf", truth, ivfFound)
+        .unionByName(Audit.score("srp", truth, srpFound))
         .orderBy(col("method"))
     }),
 

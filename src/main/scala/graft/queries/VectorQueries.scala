@@ -403,27 +403,6 @@ object VectorQueries {
       Similarity.ivfSelfTopK(vecs, "vec_id", "embedding",
         k = 4, nProbe = if (scanFraction > 0) 1 else 6, kmeansIters = 2,
         scanFraction = scanFraction))
-    def score(method: String, truth: DataFrame, found: DataFrame) = {
-      // round 15 (job-count reduction): truth keys are unique for every
-      // method (ranked kNN pairs, mutual edges, per-vector agreement
-      // rows), so a LEFT join marks true positives without changing
-      // found's cardinality — tp and n_found come out of ONE
-      // aggregation where the semi-join shape cost an extra agg, an
-      // extra crossJoin, and their AQE stages. Values are identical.
-      val tp = found
-        .join(truth.withColumn("__t", lit(1L)), Seq("a_id", "b_id"), "left")
-        .agg(coalesce(sum(col("__t")), lit(0L)).as("tp"),
-          count(lit(1)).as("n_found"))
-      val nT = truth.agg(count(lit(1)).as("n_truth"))
-      tp.crossJoin(nT)
-        .select(lit(method).as("method"), col("n_truth"), col("n_found"),
-          col("tp"), (col("n_found") - col("tp")).as("fp"),
-          (col("n_truth") - col("tp")).as("fn"),
-          expr("CASE WHEN n_found = 0 THEN 0 ELSE (tp * 1000000) div n_found END")
-            .as("precision_micro"),
-          expr("CASE WHEN n_truth = 0 THEN 0 ELSE (tp * 1000000) div n_truth END")
-            .as("recall_micro"))
-    }
     def pairs(r: DataFrame) = r.select(col("probe_id").as("a_id"),
       col("neighbor_id").as("b_id"))
     // agreement counts compared as (vec_id, n_agree) pairs: tp = rows
@@ -431,11 +410,11 @@ object VectorQueries {
     def agree(r: DataFrame) = Similarity
       .labelAgreementOver(r, vecs, "vec_id", "label")
       .select(col("vec_id").as("a_id"), col("n_agree").as("b_id"))
-    score("knn_pairs", pairs(exactR), pairs(idxR))
-      .unionByName(score("mutual_edges",
+    Audit.score("knn_pairs", pairs(exactR), pairs(idxR))
+      .unionByName(Audit.score("mutual_edges",
         Similarity.mutualTopK(exactR).select(col("a_id"), col("b_id")),
         Similarity.mutualTopK(idxR).select(col("a_id"), col("b_id"))))
-      .unionByName(score("agree_exact", agree(exactR), agree(idxR)))
+      .unionByName(Audit.score("agree_exact", agree(exactR), agree(idxR)))
       .orderBy(col("method"))
   }
 

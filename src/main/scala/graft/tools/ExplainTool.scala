@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the executed plan of a named SparkEntry query —
   * the .explain feedback loop for shuffle/reuse/pushdown iteration. */
 object ExplainTool {
@@ -11,9 +9,7 @@ object ExplainTool {
     val pos = args.filterNot(_.startsWith("--"))
     val name = pos(0)
     val sfDir = if (pos.length > 1) pos(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     if (args.contains("--static")) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (optimization rounds): dump `.explain("formatted")` for a
   * list of SparkEntry queries to `<outDir>/<query>_<tag>.txt` — the
   * plan-evidence files the optimization judge diffs (plans/r15/...).
@@ -18,10 +16,7 @@ object PlanDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // queries that pin their result (round 16) execute the interesting
     // plan EAGERLY at construction; capture those plans too, or the

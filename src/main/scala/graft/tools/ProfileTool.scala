@@ -1,10 +1,11 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (optimization rounds): run named SparkEntry queries under
-  * the bench's exact session shape and split each query's wall time into
+  * the bench's exact session shape (both build it with [[graft.Session]],
+  * so cores and master follow the same environment contract) and split
+  * each query's wall time into
   * Spark-job segments and the DRIVER GAPS between them — the breakdown
   * that says whether a slow query is task-bound (fix the plan) or
   * driver-bound (planning, collects, seed scans; fix the job count).
@@ -16,12 +17,7 @@ object ProfileTool {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // parity with Bench's session shape
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // per-job wall segments, collected by listener (events are async —
     // drained via the bridge before reading)

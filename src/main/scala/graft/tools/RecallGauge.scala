@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.ops.Pin.PinSyntax
 import graft.ops.Similarity
 
@@ -41,11 +41,8 @@ object RecallGauge {
     val settings0 = rest.filterNot(_.forall(_.isDigit))
     val settings = if (settings0.isEmpty) Seq("p6") else settings0.toSeq
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
+    val spark = Session.builder()
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

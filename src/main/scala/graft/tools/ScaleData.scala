@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 
 /** Deterministic N× upscale of a driver scale-factor directory — the
   * input side of the sf1 smoke lane (`tools/sf1_smoke.sh`): the scale
@@ -261,10 +261,8 @@ object ScaleData {
     val unknown = tables.filterNot(Tables.Names.contains)
     require(unknown.isEmpty, s"unknown --tables entries: $unknown " +
       s"(known: ${Tables.Names.mkString(",")})")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
+    val spark = Session.builder()
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tables.foreach { name =>

@@ -95,4 +95,21 @@ class ExtensionsSpec extends SparkTestBase {
     assert(g1.map(_.getLong(0)) == Seq(12L, 10L))
     assert(out(1).getSeq[org.apache.spark.sql.Row](1).map(_.getLong(0)) == Seq(20L))
   }
+
+  test("install is idempotent: a second install replaces nothing") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // a fresh session: its registry holds Spark's built-ins only
+    val session = spark.newSession()
+    val functions = session.sessionState.functionRegistry
+    def infos = GraftExtensions.registry.map { case (name, _) =>
+      functions.lookupFunction(FunctionIdentifier(name)).get }
+    GraftExtensions.install(session)
+    val first = infos
+    GraftExtensions.install(session)
+    // every registration mints a fresh ExpressionInfo, so unchanged
+    // instances prove no name was registered again
+    assert(infos.zip(first).forall { case (now, before) => now eq before })
+    assert(session.sql("SELECT fuzz_ratio('Jon Tester', 'John Tester')")
+      .head.getInt(0) == 95)
+  }
 }
