@@ -20,9 +20,9 @@ import graft.ops.Pin.PinSyntax
   * vocabulary plus a driver-side argmax of exactly ONE row (the chosen
   * pair — the same dimension-scale eager action as
   * contaminationBloom's sketch collect), then a map-only array fold
-  * applies the merge. Rounds are localCheckpoint-ed with superseded
-  * blocks dropped, the [[Dedup.connectedComponents]] discipline, so M
-  * merges cost M small shuffles, not an M-deep lineage.
+  * applies the merge. Each round is pinned and the round it supersedes
+  * released ([[Pin.release]]), as in [[Dedup.connectedComponents]], so
+  * M merges cost M small shuffles, not an M-deep lineage.
   */
 object Bpe {
 
@@ -73,19 +73,12 @@ object Bpe {
         "scale merge counts.")
     val spark = docs.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    def persisted = sc.getPersistentRDDs
-    def dropBlocks(ids: scala.collection.Set[Int]): Unit =
-      ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = false)))
-
-    val preexisting = persisted.keySet
     var cur = docs
       .select(explode(wordsOf(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("freq"),
         concat(split(col("word"), ""), array(lit(Eow))).as("syms"))
       .pinned
-    var curIds = persisted.keySet -- preexisting
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long, Long)]
     var step = 0
@@ -107,20 +100,18 @@ object Bpe {
         val l = best(0).getAs[String]("left")
         val r = best(0).getAs[String]("right")
         val f = best(0).getAs[Long]("pair_freq")
-        val beforeNext = persisted.keySet
         val next = cur
           .select(col("freq"), mergeFold(col("syms"), l, r).as("syms"))
           .pinned
-        val nextIds = persisted.keySet -- beforeNext
         val vocabAfter = next.select(explode(col("syms")).as("s"))
           .agg(countDistinct(col("s"))).collect()(0).getLong(0)
-        dropBlocks(curIds) // previous round superseded
-        cur = next; curIds = nextIds
+        Pin.release(cur) // previous round superseded
+        cur = next
         step += 1
         out += ((step, l, r, f, vocabAfter))
       }
     }
-    dropBlocks(curIds)
+    Pin.release(cur)
     out.toSeq.toDF("step", "left", "right", "pair_freq", "vocab_size_after")
   }
 

@@ -433,30 +433,11 @@ object Dedup {
     * returning partial components would merge/split dedup clusters
     * incorrectly downstream. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 15): DataFrame = {
-    // Each round's localCheckpoint(true) pins blocks in the BlockManager;
-    // without explicit cleanup a k-round run holds k full label sets
-    // (round 1's cache leak, at label-set scale). Superseded rounds are
-    // unpersisted via getPersistentRDDs diffing — only the final labels
-    // checkpoint survives the call. (Snapshot diffing assumes no
-    // concurrent job persists RDDs mid-call, which holds for this
-    // driver-side loop.)
-    val sc = pairs.sparkSession.sparkContext
-    def persisted = sc.getPersistentRDDs
-    def dropBlocks(ids: scala.collection.Set[Int]): Unit =
-      ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = false)))
-    // a previous call's final-labels checkpoint is dead weight once a new
-    // run starts (repeated bench passes would otherwise accumulate one
-    // pinned label set per invocation). Constraint: a caller must finish
-    // consuming one connectedComponents result before starting another —
-    // true for every composition in this library.
-    priorLabelIds.synchronized {
-      // RDD ids are per-SparkContext: ids recorded under a stopped context
-      // must not unpersist whatever RDD reuses them in a fresh context
-      if (priorLabelCtx ne sc) { priorLabelIds.clear(); priorLabelCtx = sc }
-      dropBlocks(priorLabelIds.toSet)
-      priorLabelIds.clear()
-    }
-    val preexisting = persisted.keySet
+    // Each round's pin holds a full label set in the BlockManager; a
+    // k-round run would hold k of them (round 1's cache leak, at
+    // label-set scale), so each superseded round is released as soon as
+    // the next is pinned, and the edge pin once the loop ends. The
+    // returned labels are left to the ContextCleaner.
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
       // NOT layout-aligned (deliberate, work-channel-measured): the
@@ -464,11 +445,10 @@ object Dedup {
       // frame under AQE, so the edge side never re-exchanges anyway — a
       // dst-aligned pin added bytes and time at both SFs
       .pinned // materialize once; truncate upstream lineage
-    val edgeIds = persisted.keySet -- preexisting
-    var labels = edges.groupBy(col("src").as("id"))
+    var pinnedLabels = edges.groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), first(col("src"))).as("component"))
       .pinned
-    var labelIds = persisted.keySet -- edgeIds -- preexisting
+    var labels = pinnedLabels
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -485,7 +465,6 @@ object Dedup {
             .as("component"))
       // pointer jump: follow my label to ITS label (components are always
       // ids that appear as edge endpoints, so the lookup always resolves)
-      val beforeNext = persisted.keySet
       val next = propagated.as("l")
         .join(propagated.select(col("id").as("pid"), col("component").as("pcomp")),
           col("l.component") === col("pid"), "left")
@@ -494,28 +473,22 @@ object Dedup {
             .as("component"),
           col("l.prev").as("prev"))
         .pinned
-      val nextIds = persisted.keySet -- beforeNext
       val changed = next.filter(col("component") =!= col("prev")).limit(1).count()
-      dropBlocks(labelIds -- nextIds) // previous round superseded
+      Pin.release(pinnedLabels) // previous round superseded
+      pinnedLabels = next
       labels = next.select("id", "component") // reads the checkpoint, no recompute
-      labelIds = nextIds
       converged = changed == 0
       iter += 1
     }
-    dropBlocks(edgeIds) // final labels checkpoint is self-contained
-    priorLabelIds.synchronized { priorLabelIds ++= labelIds }
-    if (!converged)
+    Pin.release(edges) // final labels checkpoint is self-contained
+    if (!converged) {
+      Pin.release(pinnedLabels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds; " +
           "raise maxIter (cluster diameter exceeds 2^maxIter after pointer jumping)")
+    }
     labels
   }
-
-  /** Block-set ids of the most recent [[connectedComponents]] result,
-    * dropped at the start of the next call (valid only within
-    * `priorLabelCtx`'s SparkContext). */
-  private val priorLabelIds = scala.collection.mutable.Set.empty[Int]
-  private var priorLabelCtx: org.apache.spark.SparkContext = null
 
   /** Embedding cosine near-dup pairs blocked by SRP-LSH bands — the
     * hyperplane alternative to [[embeddingNearDupsIvf]]: a `bits`-bit
@@ -718,13 +691,11 @@ object Dedup {
     * (id, component), component = min id, covering every id in either
     * input. */
   def mergeComponents(existing: DataFrame, newPairs: DataFrame): DataFrame = {
-    // materialize the assignment BEFORE entering connectedComponents:
-    // the natural caller passes a PREVIOUS connectedComponents result,
-    // whose checkpoint blocks the next call's cross-call cleanup drops
-    // at entry — consuming that lineage afterwards (the singleton
-    // anti-join below) would hit CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-    // One assignment-scale snapshot, released by the ContextCleaner
-    // when the returned frame is no longer referenced.
+    // materialize the assignment once: it feeds two consumers (the
+    // edge set inside connectedComponents and the singleton anti-join
+    // below), each of which would otherwise re-run its lineage. One
+    // assignment-scale snapshot, released by the ContextCleaner when
+    // the returned frame is no longer referenced.
     val snap = existing.pinned
     val assignmentEdges = snap
       .filter(col("id") =!= col("component"))

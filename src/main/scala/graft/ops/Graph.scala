@@ -54,9 +54,8 @@ object Graph {
     * teleport mass; nodes with no out-links (dangling) receive but
     * never emit.
     *
-    * Lineage is truncated with a localCheckpoint every 8 iterations so
-    * deep runs don't accumulate an unbounded plan (the
-    * [[Dedup.connectedComponents]] discipline); typical analytic use
+    * Lineage is truncated with a [[Pin.pin]] every 8 iterations so deep
+    * runs don't accumulate an unbounded plan; typical analytic use
     * (≤ 8 iterations) stays a pure declarative plan.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.graftbridge.ContextBridge
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Concurrent materialization of INDEPENDENT pinned frames
   * (optimization round 16, guide §2.6 "overlap independent jobs").
@@ -16,14 +17,13 @@ import org.apache.spark.sql.DataFrame
   * the first job with tasks from the second, which is exactly the
   * behaviour the guide recommends.
   *
-  * Safety: `Dataset.localCheckpoint` / `checkpoint` are independent
-  * actions on independent plans — no shared mutable state beyond the
-  * SparkContext, which is thread-safe for job submission. Do NOT route
-  * frames through here whose construction itself mutates session state
-  * (connectedComponents' persistent-RDD diffing assumes no concurrent
-  * persist; Pin.pinAligned serializes on the session anyway). Output
-  * identity: each arm materializes the same rows it would alone —
-  * concurrency changes scheduling, never content. */
+  * Each arm runs with a copy of the caller's Spark local properties
+  * (job tags, job group, description), taken when [[pinAll]] is
+  * called: pool threads inherit them only when the thread is created,
+  * so a warm pool would otherwise run arm jobs under whatever the
+  * thread first saw. Output identity: each arm materializes the same
+  * rows it would alone — concurrency changes scheduling, never
+  * content. */
 object Par {
 
   /** Build AND pin two independent arms concurrently (thunks, not
@@ -42,7 +42,11 @@ object Par {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val fs = arms.map(a => Future(Pin.pin(a())))
+    val sc = SparkSession.active.sparkContext
+    val fs = arms.map { a =>
+      val props = ContextBridge.localProperties(sc)
+      Future(ContextBridge.withLocalProperties(sc, props)(Pin.pin(a())))
+    }
     fs.map(Await.result(_, Duration.Inf))
   }
 }

@@ -1,7 +1,11 @@
 package graft.ops
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.Dataset
+import org.apache.spark.graftbridge.ContextBridge
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage pinning with a deployment-selectable durability mode.
   *
@@ -35,11 +39,15 @@ import org.apache.spark.sql.Dataset
   * subdirectories). Checkpoint files accumulate for the lifetime of the
   * job unless `spark.cleaner.referenceTracking.cleanCheckpoints=true`
   * lets the ContextCleaner reap them with their RDDs — set it in
-  * cluster deployments (README "Cluster deployment" note). The
-  * BlockManager-based cleanup some kernels do (getPersistentRDDs
-  * diffing in [[Dedup.connectedComponents]]) degrades to a no-op in
-  * reliable mode by construction: reliable checkpoints never enter the
-  * block store.
+  * cluster deployments (README "Cluster deployment" note).
+  *
+  * Iterative kernels free each superseded round with [[release]], which
+  * frees exactly the block set behind the frame it is handed — no
+  * BlockManager snapshots, no state shared between calls or threads, so
+  * one call's result survives any later call and kernels may run as
+  * [[Par]] arms. A kernel's returned pin is left to the ContextCleaner,
+  * like every other frame. Reliable checkpoints never enter the block
+  * store, so there [[release]] is a no-op.
   *
   * Both modes materialize the frame ONCE and freeze its rows —
   * anything derived from materialization order (`spark_partition_id`
@@ -92,12 +100,28 @@ object Pin {
     }
   }
 
+  /** Free the block set behind each pinned frame — a round's pin once
+    * the next round supersedes it. A pin's logical plan is a bare
+    * `LogicalRDD` whose RDD is exactly the block set the pin added, so
+    * anything else is refused. Reliable checkpoints hold no blocks:
+    * for them this is a no-op. Reading a frame after releasing it
+    * fails. */
+  def release(frames: Dataset[_]*): Unit = frames.foreach { ds =>
+    ds.queryExecution.logical match {
+      case r: LogicalRDD =>
+        if (r.rdd.getStorageLevel != StorageLevel.NONE)
+          ContextBridge.unpersist(ds.sparkSession.sparkContext, r.rdd.id)
+      case p => throw new IllegalArgumentException(
+        s"Pin.release takes a pinned frame, got ${p.nodeName}")
+    }
+  }
+
   /** True when layout-aligned pinning is enabled on this session.
     * An explicit `spark.graft.pin.alignedLayout` conf always wins
     * (it's an unregistered key, so `getOption` is None exactly when
     * the user never set it); with no conf the default is resolved
     * from the master type by [[defaultAligned]]. */
-  def aligned(sess: org.apache.spark.sql.SparkSession): Boolean =
+  def aligned(sess: SparkSession): Boolean =
     sess.conf.getOption(AlignConf) match {
       case Some(v) => v == "true"
       case None => defaultAligned(sess.sparkContext.isLocal)
@@ -117,67 +141,35 @@ object Pin {
 
   /** Pin with a DECLARED join-key layout — the network-shuffle
     * deployment knob. When `spark.graft.pin.alignedLayout=true`, the
-    * frame materializes repartitioned by `keys` with AQE scoped OFF for
-    * just this eager job, because a checkpoint taken through an
-    * `AdaptiveSparkPlan` reports `UnknownPartitioning` and FORGETS the
-    * layout — with it preserved, every iteration of a fixed-point
-    * kernel satisfies its join's clustering requirement straight from
-    * the pinned frame instead of re-exchanging it per round.
+    * frame materializes as `repartition(n, keys)` with `n` =
+    * `spark.sql.shuffle.partitions` (a repartition to an explicit
+    * number, which AQE never coalesces), and the pinned frame is
+    * rebuilt over the same RDD declaring `HashPartitioning(keys, n)`.
+    * A checkpoint taken through an `AdaptiveSparkPlan` reports
+    * `UnknownPartitioning` and so FORGETS the layout; declared, every
+    * iteration of a fixed-point kernel satisfies its join's clustering
+    * requirement straight from the pinned frame instead of
+    * re-exchanging it per round. AQE stays on throughout.
     *
-    * The default SELF-RESOLVES from the master type (round 11 —
-    * [[defaultAligned]]): OFF under `local[*]`, ON under any
-    * multi-process master. Both sides are measured (work channel,
-    * BASELINE.md rounds 9–10): aligned pinning cuts the iterative
-    * graph kernels' shuffle volume 25–45% at sf0.1 AND sf1 (PageRank
-    * −466 MB at sf1), but on `local[*]` — where shuffle is
-    * memory-speed and essentially free — wall time got WORSE
-    * (fixed-width layouts block AQE partition coalescing in the round
-    * jobs, and the pin job loses AQE's runtime broadcasts), so locally
-    * the bytes saved buy nothing; under `local-cluster[2,8]` the knob
-    * wins BOTH wall (0.85–0.97×) and bytes (0.64–0.86×). An explicit
-    * `spark.graft.pin.alignedLayout` conf overrides the resolution in
-    * either direction. Either setting is output-identical
-    * (AlignedPinSpec). */
-  def pinAligned[T](ds: Dataset[T], keys: org.apache.spark.sql.Column*)
-      : Dataset[T] = {
-    val sess = ds.sparkSession
-    if (!aligned(sess)) pin(ds)
-    else sess.synchronized {
-      // synchronized on the session: the AQE toggle below is a
-      // session-GLOBAL conf flip around an eager job, so a concurrent
-      // pinAligned on the same session could restore AQE while this
-      // pin is still materializing (silently losing the declared
-      // layout) — serializing aligned pins per session closes that.
-      // Queries running concurrently on OTHER threads of this session
-      // still briefly plan without AQE; aligned pinning is a cluster
-      // deployment knob, documented for single-query-at-a-time jobs.
-      val aqeKey = "spark.sql.adaptive.enabled"
-      // RuntimeConfig.getOption returns the REGISTERED default ("true")
-      // even when the key was never explicitly set, so explicit-set
-      // detection goes through SQLConf.contains via the bridge — else
-      // the unset branch is unreachable and this method would pin an
-      // explicit "true" into the session conf (round-10 ADVICE)
-      val wasExplicit = org.apache.spark.sql.graftbridge.ColumnBridge
-        .explicitlySet(sess, aqeKey)
-      val prior = sess.conf.get(aqeKey, "true")
-      val wasOn = prior == "true"
-      if (wasOn) sess.conf.set(aqeKey, "false")
-      try pin(ds.repartition(keys: _*))
-      finally if (wasOn) {
-        if (wasExplicit) sess.conf.set(aqeKey, prior)
-        // key was at its default: restore by unsetting, not by pinning
-        // an explicit "true" into the session conf
-        else sess.conf.unset(aqeKey)
-      }
+    * The default SELF-RESOLVES from the master type ([[defaultAligned]]
+    * holds the measured trade: the aligned layout cuts the iterative
+    * graph kernels' shuffle 25–45% at sf0.1 and sf1, and pays off in
+    * wall time only where shuffle crosses a process boundary); an
+    * explicit `spark.graft.pin.alignedLayout` conf overrides it either
+    * way. Either setting is output-identical (AlignedPinSpec). */
+  def pinAligned[T](ds: Dataset[T], keys: Column*): Dataset[T] =
+    if (!aligned(ds.sparkSession)) pin(ds)
+    else {
+      val n = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      ColumnBridge.withHashLayout(pin(ds.repartition(n, keys: _*)), keys, n)
     }
-  }
 
   /** Postfix spelling, so kernels keep reading as plan pipelines:
     * `frame.join(...).distinct().pinned`. */
   implicit class PinSyntax[T](private val ds: Dataset[T]) extends AnyVal {
     def pinned: Dataset[T] = pin(ds)
     /** [[pinAligned]] postfix: `edges.pinnedBy(col("src"))`. */
-    def pinnedBy(keys: org.apache.spark.sql.Column*): Dataset[T] =
+    def pinnedBy(keys: Column*): Dataset[T] =
       pinAligned(ds, keys: _*)
   }
 }

@@ -955,12 +955,12 @@ object Similarity {
                   c => floor(graft.functions.l2DistanceSquared(col("v"), c)
                     * lit(1000000.0) + lit(0.5)).cast("long")))))
           ).pinned
-          cur.unpersist()
+          Pin.release(cur)
           cur = updated
         }
       }
     }
-    cur.unpersist()
+    Pin.release(cur)
     spark.createDataFrame(selection.reverse)
       .toDF("rank", "vec_id", "dist_micros")
   }

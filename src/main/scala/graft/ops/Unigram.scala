@@ -92,7 +92,7 @@ object Unigram {
         vocab = toLogProbs(keepChars ++ keepMultis)
       }
       vocab.sortBy { case (p, lp) => (-lp, p) }
-    } finally words.unpersist()
+    } finally Pin.release(words)
   }
 
   /** +1-smoothed micro-nat log probabilities from integer counts. */

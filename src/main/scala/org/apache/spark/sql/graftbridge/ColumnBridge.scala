@@ -1,13 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge between the public `Column` API and Catalyst `Expression`s.
   * Spark 4 made the converters `private[sql]`, so third-party expression
   * libraries expose them via a shim in the `org.apache.spark.sql`
-  * package — the standard extension-point pattern. */
+  * package — the standard extension-point pattern. The aligned pin's
+  * Dataset-from-LogicalPlan rebuild lives here for the same reason. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -21,14 +25,20 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** True iff `key` was EXPLICITLY set on this session. The public
-    * `RuntimeConfig.getOption` falls back to a registered conf entry's
-    * DEFAULT (SQLConf.getConfString does), so it cannot distinguish
-    * "user set spark.sql.adaptive.enabled=true" from "never touched" —
-    * `SQLConf.contains` checks the explicit-settings map only. Needed
-    * by [[graft.ops.Pin.pinAligned]]'s restore-by-unset branch. */
-  def explicitlySet(spark: org.apache.spark.sql.SparkSession,
-      key: String): Boolean =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.contains(key)
+  /** Rebuild the pinned frame `ds` over the same RDD, declaring its rows
+    * hash-partitioned by `keys` into `n` partitions — the layout the
+    * caller produced with `repartition(n, keys)`, which a checkpoint
+    * taken under AQE reports as `UnknownPartitioning`. Statistics and
+    * constraints carry over unchanged. */
+  def withHashLayout[T](ds: Dataset[T], keys: Seq[Column], n: Int): Dataset[T] = {
+    val session = ds.sparkSession.asInstanceOf[classic.SparkSession]
+    val rel = ds.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val keyExprs = ds.select(keys: _*).queryExecution.analyzed.expressions.map {
+      case a: Alias => a.child
+      case e => e
+    }
+    val declared = rel.copy(outputPartitioning = HashPartitioning(keyExprs, n))(
+      session, Some(rel.computeStats()), Some(rel.constraints))
+    new classic.Dataset[T](session, declared, ds.encoder)
+  }
 }

@@ -7,10 +7,10 @@ import graft.ops.Pin.PinSyntax
 
 /** Layout-aligned pinning (`spark.graft.pin.alignedLayout`): the
   * network-shuffle deployment knob. Pins the mechanism (a checkpoint
-  * taken under AQE forgets its layout; the aligned pin scopes AQE off
-  * so it doesn't), the conf hygiene (AQE restored), and — the part a
-  * deployment actually relies on — that flipping the knob never changes
-  * kernel OUTPUT, only plan shape. */
+  * taken under AQE forgets its layout; the aligned pin declares it on
+  * the pinned frame, with AQE left on), and — the part a deployment
+  * actually relies on — that flipping the knob never changes kernel
+  * OUTPUT, only plan shape. */
 class AlignedPinSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -38,7 +38,7 @@ class AlignedPinSpec extends SparkTestBase {
       val p = df.pinnedBy(col("src"))
       // documents the Spark 4.1 behavior the aligned mode exists to fix:
       // if an upgrade starts preserving layout through AdaptiveSparkPlan,
-      // this assert fails and the AQE-off scoping can be retired
+      // this assert fails and the declared layout can be retired
       assert(p.queryExecution.executedPlan.outputPartitioning
         .toString.startsWith("UnknownPartitioning"))
     }
@@ -60,30 +60,6 @@ class AlignedPinSpec extends SparkTestBase {
     withAligned(false)(assert(!Pin.aligned(spark)))
     // and after the override is unset, resolution is back in charge
     assert(!Pin.aligned(spark))
-  }
-
-  test("AQE conf restored to its prior explicitness, not pinned") {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.explicitlySet
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val df = spark.range(100)
-      .select((col("id") % 10).as("src"), (col("id") % 3).as("dst"))
-    withAligned(true) {
-      // case 1: key never explicitly set → must STAY unset after the
-      // aligned pin (RuntimeConfig.getOption can't see the difference;
-      // SQLConf.contains via the bridge can — round-10 ADVICE)
-      spark.conf.unset(aqeKey)
-      assert(!explicitlySet(spark, aqeKey))
-      df.pinnedBy(col("src"))
-      assert(!explicitlySet(spark, aqeKey),
-        "aligned pin must not pin an explicit value into an unset conf")
-      assert(spark.conf.get(aqeKey) == "true")
-      // case 2: key explicitly set → restored verbatim, still explicit
-      spark.conf.set(aqeKey, "true")
-      df.pinnedBy(col("src"))
-      assert(explicitlySet(spark, aqeKey))
-      assert(spark.conf.get(aqeKey) == "true")
-      spark.conf.unset(aqeKey)
-    }
   }
 
   test("pageRank / HITS / BFS outputs are bit-identical under either mode") {

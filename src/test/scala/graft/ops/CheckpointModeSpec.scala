@@ -9,9 +9,9 @@ import org.apache.spark.sql.Row
   * checkpoint files appearing under the dir — and (b) change NOTHING
   * about the results, bit for bit. Covers the two kernel families the
   * round-8 verdict called out (PageRank's pinned-frame fixed point,
-  * connectedComponents' pointer-jumping loop with its BlockManager
-  * cleanup, which must degrade to a harmless no-op in reliable mode)
-  * plus the partition-id-sensitive rangePrefixSums construction. */
+  * connectedComponents' pointer-jumping loop, whose per-round
+  * `Pin.release` must be a harmless no-op in reliable mode) plus the
+  * partition-id-sensitive rangePrefixSums construction. */
 class CheckpointModeSpec extends SparkTestBase {
   import spark.implicits._
 

@@ -44,6 +44,24 @@ class DedupComponentsSpec extends SparkTestBase {
     inEdges.foreach { v => assert(got(v) == want(v), s"node $v: got ${got(v)} want ${want(v)}") }
   }
 
+  test("a held connectedComponents result survives a later call") {
+    val a = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a_id", "b_id")
+    val b = Seq((20L, 21L), (21L, 22L)).toDF("a_id", "b_id")
+    val alone = Dedup.connectedComponents(a).collect().toSet
+    val cc1 = Dedup.connectedComponents(a)
+    Dedup.connectedComponents(b)
+    assert(cc1.collect().toSet == alone)
+  }
+
+  test("connectedComponents arms through Par.pinBoth == sequential calls") {
+    val a = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
+    val b = Seq((5L, 6L), (6L, 7L), (30L, 31L), (31L, 30L)).toDF("a_id", "b_id")
+    val sequential = (Dedup.connectedComponents(a).collect().toSet,
+      Dedup.connectedComponents(b).collect().toSet)
+    val (pa, pb) = Par.pinBoth(Dedup.connectedComponents(a), Dedup.connectedComponents(b))
+    assert((pa.collect().toSet, pb.collect().toSet) == sequential)
+  }
+
   test("mergeComponents(incremental) == full recompute, on random graphs") {
     val rnd = new Random(20260813)
     val n = 60
