@@ -1,4 +1,16 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.ops.QueryMetrics
+
+/** The graded bench: each SparkEntry query (or those named in
+  * `SPARK_GRAFT_BENCH_ONLY`) run best-of-`SPARK_GRAFT_BENCH_RUNS` into a
+  * noop sink, after one untimed [[warmUp]]. Each run goes through
+  * [[QueryMetrics.capture]]; its record supplies the query's work
+  * channel (shuffle bytes, CPU, tasks, failed tasks) and the run-wide
+  * spill totals. Prints the full JSON line and the compact one, and
+  * writes the per-query artifact (see the artifact-path notes below). */
 object Bench {
   /** The graded SF dir — the ONE constant behind both the
     * SPARK_GRAFT_SF_DIR default and the "is this a full default run"
@@ -33,6 +45,42 @@ object Bench {
       s""""spill":{"memBytes":$memSpill,"diskBytes":$diskSpill},""" +
       s""""slowest":$slowJson,"perQueryArtifact":"BENCH_full_latest.json"}"""
   }
+  /** Untimed warm-up: JVM, codegen and Hadoop-FS initialization, not
+    * query work. The `Dev` profile runs the same one. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    noopWrite(spark.read.parquet(s"$sfDir/region.parquet"))
+  }
+
+  /** Harness v2: materialize EVERY output column via a noop-format
+    * write. Under the old `count()`, Catalyst's ColumnPruning dropped
+    * unreferenced projections and EliminateSorts removed trailing ORDER
+    * BYs, so map-only expression-kernel queries were priced as parquet
+    * row-counts (q54 html-strip: 0.13s counted vs 1.08s real). The noop
+    * sink consumes each InternalRow and discards it — full query work,
+    * zero I/O cost in the measurement. */
+  def noopWrite(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Print a failure to stderr: `<what>: <exception>`, its first stack
+    * frames, then its cause chain. A swallowed root cause turns every
+    * at-scale failure into a blind reproduction hunt. */
+  def printFailure(what: String, e: Throwable): Unit = {
+    System.err.println(s"$what: $e")
+    e.getStackTrace.take(12).foreach(f => System.err.println(s"    at $f"))
+    // identity-set guard: a cycle longer than a direct self-link
+    // (A→B→A) must not hang the error handler
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
+    seen.add(e)
+    var cause = e.getCause
+    while (cause != null && seen.add(cause)) {
+      System.err.println(s"  caused by: $cause")
+      cause.getStackTrace.take(6).foreach(f => System.err.println(s"    at $f"))
+      cause = cause.getCause
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
     // best-of-n per query: a single pass is hostage to transient external
@@ -57,64 +105,7 @@ object Bench {
             "ignored (use ';' between pairs when a value contains ',')")
       }
     }
-    // spill accounting (round-9 memory-pressure lane): task-level
-    // memory/disk spill totals across the whole run, reported in the
-    // JSON line — a constrained-heap pass (e.g. -Xmx8g at sf1) proves
-    // graceful spill exactly when these are nonzero AND errors is empty
-    val memSpill = new java.util.concurrent.atomic.AtomicLong()
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong()
-    // WORK channel (round 9): cumulative task-level shuffle bytes, CPU
-    // time, and task counts. Unlike wall-clock — which this host moves
-    // by ±20% per query between same-window passes (see BASELINE.md's
-    // A/A calibration) — shuffle volume is a deterministic property of
-    // the physical plan over fixed input, so per-query deltas of these
-    // counters decide "did this change add or remove work" exactly,
-    // where a timing diff can only shrug. Sliced per query by
-    // snapshotting around each run with the listener bus drained
-    // (events are async; without the drain a query's tail lands on the
-    // next query's account).
-    val shufRead = new java.util.concurrent.atomic.AtomicLong()
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong()
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong()
-    val nTasks = new java.util.concurrent.atomic.AtomicLong()
-    // failed/killed task ends land in the SAME metrics stream: a stage
-    // retry re-reads its shuffle input, so a query's byte counters can
-    // inflate over the plan-deterministic value for execution (not
-    // plan) reasons. Counting them separately lets a work-channel diff
-    // distinguish "the plan changed" from "tasks were retried in this
-    // window" (round 11: a full sf1 run showed q61 +25 MB that three
-    // identical-prefix partial runs did not reproduce). Only ends whose
-    // REASON implies a re-execution count (TaskFailedReason that the
-    // scheduler resubmits) — a TaskKilled from speculative execution or
-    // an intentional job cancel does not inflate any byte counter, and
-    // counting it would make bench_compare's "[retried N task(s)]"
-    // annotation fire on runs with no retry-driven inflation
-    // (round-11 ADVICE).
-    val nFailed = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          t.reason match {
-            case _: org.apache.spark.TaskKilled => () // speculation/cancel
-            case org.apache.spark.Success => ()
-            case _ => nFailed.incrementAndGet() // failed → will be retried
-          }
-          if (m != null) {
-            memSpill.addAndGet(m.memoryBytesSpilled)
-            diskSpill.addAndGet(m.diskBytesSpilled)
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            cpuNs.addAndGet(m.executorCpuTime)
-            nTasks.incrementAndGet()
-          }
-        }
-      })
-    // untimed warmup: JVM/codegen/Hadoop-FS init, not query work
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet")
-      .write.format("noop").mode("overwrite").save()
+    warmUp(spark, sfDir)
     // optional comma-separated query-name filter for local iteration
     // (e.g. SPARK_GRAFT_BENCH_ONLY=q16_simhash,q17_ngram_jaccard)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -127,50 +118,41 @@ object Bench {
     val best = scala.collection.mutable.Map[String, Double]()
     val errors = scala.collection.mutable.Map[String, String]()
     // per-query WORK from the last successful run (plan-deterministic,
-    // so any run's numbers are THE numbers; the last overwrite keeps
-    // the code a counter diff, no min-tracking)
-    val work = scala.collection.mutable.Map[String, (Long, Long, Long, Long, Long)]()
-    def drain(): Unit =
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    // so any run's numbers are THE numbers). WORK channel (round 9):
+    // task-level shuffle bytes, CPU time and task counts from each run's
+    // QueryMetrics record. Unlike wall-clock — which this host moves by
+    // ±20% per query between same-window passes (see BASELINE.md's A/A
+    // calibration) — shuffle volume is a deterministic property of the
+    // physical plan over fixed input, so these decide "did this change
+    // add or remove work" exactly, where a timing diff can only shrug.
+    // Failed (retried) tasks are counted apart (round 11: a full sf1 run
+    // showed q61 +25 MB that three identical-prefix partial runs did not
+    // reproduce), so a diff can tell "the plan changed" from "tasks were
+    // retried in this window".
+    val work = scala.collection.mutable.Map[String, QueryMetrics.Tasks]()
+    // spill accounting (round-9 memory-pressure lane): memory/disk spill
+    // totals over every run, failed ones included, reported in the JSON
+    // line — a constrained-heap pass (e.g. -Xmx8g at sf1) proves graceful
+    // spill exactly when these are nonzero AND errors is empty
+    var memSpill, diskSpill = 0L
     for (_ <- 1 to runs; name <- names) {
       val fn = SparkEntry.queries(name)
-      drain()
-      val (r0, w0, c0, k0, f0) =
-        (shufRead.get, shufWrite.get, cpuNs.get, nTasks.get, nFailed.get)
-      val t0 = System.nanoTime()
-      try {
-        // harness v2: materialize EVERY output column via a noop-format
-        // write. Under the old `count()`, Catalyst's ColumnPruning dropped
-        // unreferenced projections and EliminateSorts removed trailing
-        // ORDER BYs, so map-only expression-kernel queries were priced as
-        // parquet row-counts (q54 html-strip: 0.13s counted vs 1.08s real).
-        // The noop sink consumes each InternalRow and discards it — full
-        // query work, zero I/O cost in the measurement.
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (sec < best.getOrElse(name, Double.MaxValue)) best(name) = sec
-        drain()
-        work(name) = (shufRead.get - r0, shufWrite.get - w0,
-          cpuNs.get - c0, nTasks.get - k0, nFailed.get - f0)
-      } catch {
-        case e: Throwable =>
-          errors(name) = e.getClass.getName
+      val (outcome, rec) = QueryMetrics.capture(spark) {
+        val t0 = System.nanoTime()
+        try { noopWrite(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(e) }
+      }
+      memSpill += rec.tasks.memorySpillBytes
+      diskSpill += rec.tasks.diskSpillBytes
+      outcome match {
+        case Right(sec) =>
+          if (sec < best.getOrElse(name, Double.MaxValue)) best(name) = sec
+          work(name) = rec.tasks
+        case Left(e) =>
           // the JSON line carries only the class name (stable, short);
-          // the WHY goes to stderr — a swallowed root cause turns every
-          // at-scale failure into a blind reproduction hunt
-          System.err.println(s"BENCH ERROR $name: $e")
-          e.getStackTrace.take(12).foreach(f => System.err.println(s"    at $f"))
-          // identity-set guard: a cycle longer than a direct self-link
-          // (A→B→A) must not hang the error handler mid-bench
-          val seen = java.util.Collections.newSetFromMap(
-            new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
-          seen.add(e)
-          var cause = e.getCause
-          while (cause != null && seen.add(cause)) {
-            System.err.println(s"  caused by: $cause")
-            cause.getStackTrace.take(6).foreach(f => System.err.println(s"    at $f"))
-            cause = cause.getCause
-          }
+          // the WHY goes to stderr
+          errors(name) = e.getClass.getName
+          printFailure(s"BENCH ERROR $name", e)
       }
     }
     // a query with no successful run reports -1 and an error marker
@@ -180,7 +162,7 @@ object Bench {
     val total = names.flatMap(best.get).sum
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,""" +
-        s""""spill":{"memBytes":${memSpill.get},"diskBytes":${diskSpill.get}},"sf":"$sfDir"}"""
+        s""""spill":{"memBytes":$memSpill,"diskBytes":$diskSpill},"sf":"$sfDir"}"""
     println(line)
     // The round driver's BENCH_r*.json snapshot keeps only the LAST
     // 2000 chars of stdout, and the full line above is ~6 KB at 223
@@ -194,13 +176,14 @@ object Bench {
     val slowest = names.flatMap(k => best.get(k).map(k -> _))
       .sortBy(-_._2).take(8)
     println(compactLine(total, sfDir, names.size, best.size, errors.size,
-      memSpill.get, diskSpill.get, slowest))
+      memSpill, diskSpill, slowest))
     // the deterministic work channel goes in the ARTIFACT only: the
     // round driver keeps a 2000-char truncated tail of stdout, and
     // bloating the line would push the per-query timings out of it
-    val workJson = names.flatMap(k => work.get(k).map { case (r, w, c, t, f) =>
+    val workJson = names.flatMap(k => work.get(k).map { w =>
       "\"" + k + "\":" +
-        s"""{"shuffleReadBytes":$r,"shuffleWriteBytes":$w,"cpuNs":$c,"tasks":$t,"failedTasks":$f}"""
+        s"""{"shuffleReadBytes":${w.shuffleReadBytes},"shuffleWriteBytes":${w.shuffleWriteBytes},""" +
+        s""""cpuNs":${w.cpuNs},"tasks":${w.tasks},"failedTasks":${w.failed}}"""
     }).mkString("{", ",", "}")
     // stable full artifact: the round driver's BENCH_r*.json keeps only
     // a 2000-char truncated tail of stdout, so the complete per-query

@@ -103,20 +103,8 @@ object ChaosKill {
 
     val appId = spark.sparkContext.applicationId
 
-    // q99's trade graph (GraphQueries.scala): symmetrized
-    // customer⇄supplier edges, disjoint id spaces via the 2^40 offset
-    def tradeEdges() = {
-      import graft.Tables.t
-      val li = t(spark, sfDir, "lineitem")
-      val orders = t(spark, sfDir, "orders")
-      val base = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .distinct()
-      base
-        .select(col("cust").as("src"), (col("supp") + 1099511627776L).as("dst"))
-        .unionByName(base
-          .select((col("supp") + 1099511627776L).as("src"), col("cust").as("dst")))
-    }
+    // q99's trade graph: symmetrized customer⇄supplier edges
+    def tradeEdges() = graft.queries.GraphQueries.tradeGraph(spark, sfDir)
 
     def run(): (Long, String) = {
       import graft.Tables.t

@@ -21,17 +21,23 @@ object Verify {
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) =>
         includes.forall(_.exists(name.contains)) &&
           !excludes.exists(name.contains) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // a failing query prints its stack and causes and the run carries on
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        Bench.printFailure(s"[verify] $name failed", e)
+        Some(name)
       }
     }
+    System.err.println(s"[verify] ${failed.size} of ${selected.size} queries failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ", ", "")))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -323,13 +323,6 @@ package object functions {
   // Vector math (similarity search / embedding dedup)
   // ---------------------------------------------------------------------
 
-  /** Dot product of two equal-length float/double array columns (one-pass
-    * codegen'd expression; summation order = element order). */
-  def dotProduct(a: Column, b: Column): Column =
-    expr2col(DotProduct(col2expr(a), col2expr(b)))
-
-  def l2Norm(a: Column): Column = expr2col(L2Norm(col2expr(a)))
-
   def l2DistanceSquared(a: Column, b: Column): Column =
     expr2col(L2Dist2(col2expr(a), col2expr(b)))
 
@@ -446,9 +439,6 @@ package object functions {
   def bloomMightContain(bloom: Column, item: Column): Column =
     expr2col(org.apache.spark.sql.catalyst.expressions
       .BloomFilterMightContain(col2expr(bloom), col2expr(item)))
-
-  /** Hamming distance between two 64-bit hashes. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Jaccard similarity of two set-valued array columns (one-pass
     * expression; inputs must be element-distinct). */

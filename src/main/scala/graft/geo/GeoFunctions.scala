@@ -33,7 +33,6 @@ object GeoFunctions {
   private[graft] val containsFn = (a: Array[Byte], b: Array[Byte]) =>
     if (a == null || b == null) false
     else GeoJson.fromWkb(a).contains(GeoJson.fromWkb(b))
-  private val containsUdf = udf(containsFn)
 
   private[graft] val centroidFn = (a: Array[Byte]) => {
     val c = GeoJson.fromWkb(a).getCentroid
@@ -84,9 +83,6 @@ object GeoFunctions {
 
   /** Exact JTS intersects over two WKB columns. */
   def stIntersects(a: Column, b: Column): Column = intersectsUdf(a, b)
-
-  /** Exact JTS contains over two WKB columns. */
-  def stContains(a: Column, b: Column): Column = containsUdf(a, b)
 
   /** Centroid as array(x, y). */
   def stCentroid(a: Column): Column = centroidUdf(a)

@@ -404,21 +404,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Exact pairwise n-gram Jaccard within a caller-supplied block —
-    * only for blocks known to be small (the reference-style state/chamber
-    * blocking); prefer [[ngramJaccardPairs]] otherwise. */
-  def ngramJaccardPairsBlocked(docs: DataFrame, idCol: String, textCol: String,
-      blockCol: Column, n: Int = 3, threshold: Double = 0.6): DataFrame = {
-    val base = docs.select(col(idCol).as("id"),
-      charShingles(col(textCol), n).as("grams"), blockCol.as("block"))
-    base.as("x").join(base.as("y"), col("x.block") === col("y.block"))
-      .filter(col("x.id") < col("y.id"))
-      .withColumn("jaccard", jaccard(col("x.grams"), col("y.grams")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
-        round(col("jaccard"), 4).as("jaccard"))
-  }
-
   /** Connected components over a near-dup pair list by iterative
     * min-label propagation with pointer jumping: each round every doc
     * adopts min(own label, neighbors' labels, label of its own label).
@@ -732,20 +717,6 @@ object Dedup {
     clustered.unionByName(singletons)
       .groupBy(col("cluster_size"))
       .agg(count(lit(1)).as("n_clusters"))
-  }
-
-  /** Embedding cosine near-dup pairs within a caller-supplied blocking
-    * key — only for blocks known small (an upstream partition/label);
-    * prefer [[embeddingNearDupsIvf]] when no natural block exists. */
-  def embeddingNearDups(vecs: DataFrame, idCol: String, vecCol: String,
-      blockCol: Column, threshold: Double = 0.99): DataFrame = {
-    val base = vecs.select(col(idCol).as("id"), col(vecCol).as("v"), blockCol.as("block"))
-    base.as("x").join(base.as("y"), col("x.block") === col("y.block"))
-      .filter(col("x.id") < col("y.id"))
-      .withColumn("cosine", cosineSimilarity(col("x.v"), col("y.v")))
-      .filter(col("cosine") >= threshold)
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
-        round(col("cosine"), 6).as("cosine"))
   }
 
   /** Embedding cosine near-dup pairs blocked by IVF bucket — the scale

@@ -282,14 +282,6 @@ object SetSimilarity {
         expr("(inter * 1000000 div sa)").as("cont_micro"))
   }
 
-  /** Word-token view of a text column: distinct lowercase alphanumeric
-    * runs per id — mirrored in SQL with DuckDB's string_split_regex. */
-  def wordTokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Fan.widen(df.select(col(idCol).as(idCol), col(textCol).as(textCol)))
-      .select(col(idCol).as("id"),
-        explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("token"))
-      .where(length(col("token")) > 0)
-
   /** Word n-gram (shingle) view of a text column: each set element is n
     * consecutive whitespace-separated words joined by one space — the
     * q170 oracle mirrors it with array_to_string(t[s:s+n-1], ' ').

@@ -14,16 +14,20 @@ import graft.ops.Pin.PinSyntax
   */
 object DedupQueries {
 
-  /** documents ∪ near-duplicated documents (id + 2^40, text + " xq").
+  /** `docs` ∪ its near-duplicate twins (id + 2^40, text + " xq"), over
+    * an already-projected frame holding `doc_id` and `text`, so each
+    * query keeps its own column list.
     * The namespace offset is 1L<<40, not a decimal million: TPC-H base
     * keys pass 1e6 around sf7, and a colliding twin id silently corrupts
     * every pair list downstream. 2^40 holds to ~sf7,000,000. */
-  private def corpusWithNearDups(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"), col("source"))
+  private[queries] def withNearDups(docs: DataFrame): DataFrame =
     docs.unionByName(docs
       .withColumn("doc_id", col("doc_id") + 1099511627776L)
       .withColumn("text", concat(col("text"), lit(" xq"))))
-  }
+
+  private def corpusWithNearDups(s: SparkSession, dir: String): DataFrame =
+    withNearDups(
+      t(s, dir, "documents").select(col("doc_id"), col("text"), col("source")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

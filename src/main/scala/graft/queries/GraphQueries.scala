@@ -12,6 +12,23 @@ import graft.ops.{Dedup, Graph}
   * via connected components, and PDF-text cleanup. */
 object GraphQueries {
 
+  /** The symmetrized customer↔supplier trade graph as `(src, dst)`:
+    * distinct (customer, supplier) trade pairs in both orientations,
+    * supplier ids offset by 2^40 past the customer key space. Because
+    * the pairs are distinct and the two orientations live in disjoint
+    * id spaces, the edge list is duplicate-free by construction. */
+  def tradeGraph(s: SparkSession, dir: String): DataFrame = {
+    val li = t(s, dir, "lineitem")
+    val orders = t(s, dir, "orders")
+    val base = li.join(orders, col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
+      .distinct()
+    base
+      .select(col("cust").as("src"), (col("supp") + 1099511627776L).as("dst"))
+      .unionByName(base
+        .select((col("supp") + 1099511627776L).as("src"), col("cust").as("dst")))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // 2-hop traversal over the customer—part bipartite graph: for probe
@@ -35,10 +52,8 @@ object GraphQueries {
     // Dedup application end-to-end: LSH pairs -> connected components ->
     // one representative per cluster (rows-only; components are iterative)
     "q47_dedup_apply" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(docs
-        .withColumn("doc_id", col("doc_id") + 1099511627776L)
-        .withColumn("text", concat(col("text"), lit(" xq"))))
+      val corpus = DedupQueries.withNearDups(
+        t(s, dir, "documents").select(col("doc_id"), col("text")))
       val pairs = Dedup.minHashPairs(corpus, "doc_id", "text",
         k = 32, bands = 8, shingleLen = 3, threshold = 0.5)
       Dedup.applyDedup(corpus, "doc_id", pairs)
@@ -50,10 +65,8 @@ object GraphQueries {
     // connected components) assigned wholly to one side by a
     // deterministic component hash (rows-only; components are iterative)
     "q50_leakage_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(docs
-        .withColumn("doc_id", col("doc_id") + 1099511627776L)
-        .withColumn("text", concat(col("text"), lit(" xq"))))
+      val corpus = DedupQueries.withNearDups(
+        t(s, dir, "documents").select(col("doc_id"), col("text")))
       val pairs = Dedup.minHashPairs(corpus, "doc_id", "text",
         k = 32, bands = 8, shingleLen = 3, threshold = 0.5)
       Dedup.leakageSafeSplit(corpus, "doc_id", pairs, testPct = 10)
@@ -67,10 +80,8 @@ object GraphQueries {
     // list — work scales with |assignment| + |new pairs| (rows-only;
     // DedupComponentsSpec pins equivalence with the full recompute)
     "q87_merge_components" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(docs
-        .withColumn("doc_id", col("doc_id") + 1099511627776L)
-        .withColumn("text", concat(col("text"), lit(" xq"))))
+      val corpus = DedupQueries.withNearDups(
+        t(s, dir, "documents").select(col("doc_id"), col("text")))
       // pinned (round 15): the two batch filters below are separate
       // consumers — unpinned they re-ran the whole LSH signature +
       // bucket + verify pipeline twice
@@ -92,10 +103,8 @@ object GraphQueries {
     // that must run before any dedup output is trusted (rows-only;
     // components are iterative)
     "q84_cluster_histogram" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(docs
-        .withColumn("doc_id", col("doc_id") + 1099511627776L)
-        .withColumn("text", concat(col("text"), lit(" xq"))))
+      val corpus = DedupQueries.withNearDups(
+        t(s, dir, "documents").select(col("doc_id"), col("text")))
       val pairs = Dedup.minHashPairs(corpus, "doc_id", "text",
         k = 32, bands = 8, shingleLen = 3, threshold = 0.5)
       Dedup.clusterSizeHistogram(corpus, "doc_id", pairs)
@@ -107,19 +116,9 @@ object GraphQueries {
     // offset past the customer key space). Oracle-exact — the
     // all-BIGINT update rule unrolls to a 5-CTE SQL twin.
     "q99_pagerank" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val orders = t(s, dir, "orders")
-      val base = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .distinct()
-      val edges = base
-        .select(col("cust").as("src"), (col("supp") + 1099511627776L).as("dst"))
-        .unionByName(base
-          .select((col("supp") + 1099511627776L).as("src"), col("cust").as("dst")))
-      // assumeSimple: `base` is distinct on (cust, supp) and the two
-      // union orientations live in disjoint id spaces (supplier ids
-      // offset by 2^40), so the symmetrized edge list is duplicate-free
-      // by construction — the op-internal dedup exchange is pure waste
+      val edges = tradeGraph(s, dir)
+      // assumeSimple: the trade graph is duplicate-free by construction
+      // (see tradeGraph) — the op-internal dedup exchange is pure waste
       Graph.pageRank(edges, "src", "dst", iterations = 5,
           assumeSimple = true)
         .orderBy(col("node"))
@@ -129,15 +128,7 @@ object GraphQueries {
     // trade graph — "rank suppliers/customers by relevance to THESE
     // accounts"; all-integer fixed point, 5 unrolled oracle rounds
     "q208_ppr" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val orders = t(s, dir, "orders")
-      val base = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .distinct()
-      val edges = base
-        .select(col("cust").as("src"), (col("supp") + 1099511627776L).as("dst"))
-        .unionByName(base
-          .select((col("supp") + 1099511627776L).as("src"), col("cust").as("dst")))
+      val edges = tradeGraph(s, dir)
       // probe ids as a literal range — deriving them from the edge
       // frame would re-run the whole base join inside every rank
       // round's recursive plan (measured 3× slower); extras outside
@@ -150,7 +141,7 @@ object GraphQueries {
       // rows simply mean "not reached from the probes"
       Graph.personalizedPageRank(edges, "src", "dst", probes, "probe",
         iterations = 5,
-        // distinct base + disjoint-orientation union (see q99)
+        // duplicate-free by construction (see tradeGraph)
         assumeSimple = true)
         .orderBy(col("node"))
     }),
@@ -318,18 +309,10 @@ object GraphQueries {
     // against DuckDB's recursive CTE — the frontier expansion is proven
     // min-dist-correct, not rows-only
     "q171_bfs_reach" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val orders = t(s, dir, "orders")
-      val base = li.join(orders, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .distinct()
-      val edges = base
-        .select(col("cust").as("src"), (col("supp") + 1099511627776L).as("dst"))
-        .unionByName(base
-          .select((col("supp") + 1099511627776L).as("src"), col("cust").as("dst")))
+      val edges = tradeGraph(s, dir)
       val probes = edges.filter(col("src") < 20)
         .select(col("src").as("probe")).distinct()
-      // distinct base + disjoint-orientation union (see q99)
+      // duplicate-free by construction (see tradeGraph)
       Graph.bfsDistances(edges, "src", "dst", probes, "probe", maxDepth = 3,
           assumeSimple = true)
         .groupBy(col("probe"), col("dist"))

@@ -191,14 +191,6 @@ object Warehouse {
       .select(col(keyCol), col("status"))
   }
 
-  /** Collapse a multi-batch union to one row per key: highest `ordering`
-    * wins (ties broken deterministically by all remaining columns). The
-    * batch analog of the reference's sequential per-row overwrite. */
-  def dedupeByKey(df: DataFrame, keys: Seq[String], ordering: Column): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering.desc)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
-
   /** Compact a parquet table directory's files into ≈`targetBytes`
     * outputs. Small-file proliferation is the silent warehouse killer
     * at 100 TB: every per-batch merge/append ([[graft.streaming

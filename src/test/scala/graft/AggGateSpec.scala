@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.catalyst.expressions.{Literal, SpecifiedWindowFrame, RowFrame}
 
+import graft.ops.QueryMetrics
+
 /** Surface-wide scale gate #3 (round 10 — the [[WindowGateSpec]] /
   * [[JoinGateSpec]] recipe applied to the third scale-killer class):
   * NO query on the driver surface may plan an UNBOUNDED-BUFFER
@@ -172,34 +174,22 @@ class AggGateSpec extends SparkTestBase {
     // construction time, so an unbounded collect INSIDE a pinned frame
     // never appears in the final plan this gate used to walk — pinning
     // had quietly become a way to shield aggregates from the gate
-    // (round-15 ADVICE). The listener walks every QueryExecution the
-    // construction runs, via its PRE-AQE sparkPlan (same walk as the
-    // planned sweep).
-    val eager =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        unexplained(qe.sparkPlan).foreach(n => eager.add(s"eager-$n"))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val offenders = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    // (round-15 ADVICE). The sweep walks every QueryExecution the
+    // construction runs (its QueryMetrics capture), via its PRE-AQE
+    // sparkPlan (same walk as the planned sweep).
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, mk) =>
-        eager.clear()
-        val df =
+        val (df, rec) = QueryMetrics.capture(spark) {
           try mk(spark, sf)
           catch { case e: Throwable =>
             fail(s"$name failed to build at sf0.001: $e") }
+        }
         val planned = unexplained(df.queryExecution.sparkPlan)
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        import scala.jdk.CollectionConverters._
-        val nodes = (planned ++ eager.asScala.toSeq).distinct
+        val eager = rec.executions.flatMap(x => unexplained(x.qe.sparkPlan))
+          .map(n => s"eager-$n")
+        val nodes = (planned ++ eager).distinct
         if (nodes.nonEmpty) Some(name -> nodes.mkString(", ")) else None
-    } finally spark.listenerManager.unregister(listener)
+    }
     val unlisted = offenders.filterNot { case (n, _) => bounded.contains(n) }
     assert(unlisted.isEmpty,
       s"queries planning an unbounded-buffer aggregate over a row-scale " +

@@ -1,13 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.ops.QueryMetrics
 
 /** Surface-wide scale gate #4 (round 12 — the class VERDICT r11's one
   * weak lived in): NO query may carry an explicit `broadcast()` hint
@@ -29,7 +24,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Lloyd/training rounds at query-construction time whose plans never
   * appear under the returned frame: (a) the returned DataFrame's
   * optimized plan; (b) every QueryExecution the construction itself
-  * executed, captured via a [[QueryExecutionListener]] (this is the
+  * executed, captured by [[QueryMetrics.capture]] (this is the
   * sweep that would have caught round 11's unbounded first-round
   * centroid broadcast inside `refineCentroids`). */
 class BroadcastGateSpec extends SparkTestBase {
@@ -138,66 +133,50 @@ class BroadcastGateSpec extends SparkTestBase {
 
   test("every explicit broadcast hint on the query surface has a " +
     "provably bounded hinted side — including eager index-build plans") {
-    val eager = new ConcurrentLinkedQueue[(String, Seq[String])]()
-    val eagerHints = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        val bad = PlanGates.unboundedBroadcastHints(qe.optimizedPlan)
-        if (bad.nonEmpty) eager.add(funcName -> bad)
-        eagerHints.addAndGet(PlanGates.broadcastHintCount(qe.optimizedPlan))
-      }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
+    // per query: unbounded hinted sides (the offense) AND the total
+    // explicit-hint count bounded or not (the whitelist-hygiene
+    // denominator — distinguishes "hint gone" from "hint now bounded")
+    val hintCounts = scala.collection.mutable.Map[String, Int]()
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, mk) =>
+        val (df, rec) = QueryMetrics.capture(spark) {
+          try mk(spark, sf)
+          catch { case e: Throwable =>
+            fail(s"$name failed to build at sf0.001: $e") }
+        }
+        val eager = rec.executions.map(x => x.funcName -> x.qe.optimizedPlan)
+        val planned = PlanGates.unboundedBroadcastHints(
+          df.queryExecution.optimizedPlan)
+        hintCounts(name) = PlanGates.broadcastHintCount(
+          df.queryExecution.optimizedPlan) +
+          eager.map { case (_, p) => PlanGates.broadcastHintCount(p) }.sum
+        val eagerBad = eager.flatMap { case (fn, p) =>
+          PlanGates.unboundedBroadcastHints(p).map(h => s"eager[$fn] $h") }
+        val all = planned ++ eagerBad
+        if (all.nonEmpty) Some(name -> all.distinct.mkString(", ")) else None
     }
-    spark.listenerManager.register(listener)
-    try {
-      // per query: unbounded hinted sides (the offense) AND the total
-      // explicit-hint count bounded or not (the whitelist-hygiene
-      // denominator — distinguishes "hint gone" from "hint now bounded")
-      val hintCounts = scala.collection.mutable.Map[String, Int]()
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, mk) =>
-          eager.clear()
-          eagerHints.set(0)
-          val df =
-            try mk(spark, sf)
-            catch { case e: Throwable =>
-              fail(s"$name failed to build at sf0.001: $e") }
-          val planned = PlanGates.unboundedBroadcastHints(
-            df.queryExecution.optimizedPlan)
-          // flush in-flight listener events before attributing them
-          ListenerBridge.drain(spark.sparkContext)
-          hintCounts(name) = PlanGates.broadcastHintCount(
-            df.queryExecution.optimizedPlan) + eagerHints.get()
-          val eagerBad = eager.asScala.toSeq.flatMap { case (fn, hints) =>
-            hints.map(h => s"eager[$fn] $h") }
-          val all = planned ++ eagerBad
-          if (all.nonEmpty) Some(name -> all.distinct.mkString(", ")) else None
-      }
-      val unlisted = offenders.filterNot { case (n, _) => bounded.contains(n) }
-      assert(unlisted.isEmpty,
-        s"queries forcing a broadcast whose hinted side is not bounded " +
-          s"by construction:\n${unlisted
-            .map { case (n, j) => s"  $n: $j" }.mkString("\n")}\n— bound " +
-          "the hinted side (limit / aggregate / local relation), drop the " +
-          "hint (let stats decide), or whitelist it here with a " +
-          "justification")
-      // staleness, BOTH ways (round-13 mandate #5): an entry whose
-      // query stopped planning ANY explicit hint is stale in a louder
-      // way than one whose hinted side became structurally bounded —
-      // name each class separately so the fix is obvious
-      val noHint = bounded.keySet.filter(n => hintCounts.getOrElse(n, 0) == 0)
-      assert(noHint.isEmpty,
-        s"whitelist entries whose query no longer plans ANY explicit " +
-          s"broadcast hint (planned or eager): ${noHint.mkString(", ")} — " +
-          "the query stopped broadcasting; remove the entries")
-      val stale = bounded.keySet -- offenders.map(_._1).toSet -- noHint
-      assert(stale.isEmpty,
-        s"stale whitelist entries (every hinted side is now structurally " +
-          s"bounded): ${stale.mkString(", ")} — remove them so the gate " +
-          "stays honest")
-    } finally spark.listenerManager.unregister(listener)
+    val unlisted = offenders.filterNot { case (n, _) => bounded.contains(n) }
+    assert(unlisted.isEmpty,
+      s"queries forcing a broadcast whose hinted side is not bounded " +
+        s"by construction:\n${unlisted
+          .map { case (n, j) => s"  $n: $j" }.mkString("\n")}\n— bound " +
+        "the hinted side (limit / aggregate / local relation), drop the " +
+        "hint (let stats decide), or whitelist it here with a " +
+        "justification")
+    // staleness, BOTH ways (round-13 mandate #5): an entry whose
+    // query stopped planning ANY explicit hint is stale in a louder
+    // way than one whose hinted side became structurally bounded —
+    // name each class separately so the fix is obvious
+    val noHint = bounded.keySet.filter(n => hintCounts.getOrElse(n, 0) == 0)
+    assert(noHint.isEmpty,
+      s"whitelist entries whose query no longer plans ANY explicit " +
+        s"broadcast hint (planned or eager): ${noHint.mkString(", ")} — " +
+        "the query stopped broadcasting; remove the entries")
+    val stale = bounded.keySet -- offenders.map(_._1).toSet -- noHint
+    assert(stale.isEmpty,
+      s"stale whitelist entries (every hinted side is now structurally " +
+        s"bounded): ${stale.mkString(", ")} — remove them so the gate " +
+        "stays honest")
   }
 
   test("negative control: the round-11 fixed-stride seed shape is flagged, " +
@@ -230,38 +209,29 @@ class BroadcastGateSpec extends SparkTestBase {
     // broadcast centroid table whose row count grew with the corpus,
     // executed EAGERLY at query-construction time and collected to the
     // driver — no returned DataFrame ever carried the shape. The main
-    // gate's QueryExecutionListener sweep exists for exactly this;
-    // this control proves the listener path actually fires on it
+    // gate's eager sweep exists for exactly this; this control proves
+    // the capture path actually fires on it
     // (the final-plan control above cannot — its plan never executes).
-    val eager = new ConcurrentLinkedQueue[(String, Seq[String])]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        val bad = PlanGates.unboundedBroadcastHints(qe.optimizedPlan)
-        if (bad.nonEmpty) eager.add(funcName -> bad)
-      }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val corpus = spark.read.parquet(s"$sf/embeddings.parquet")
-        .select(col("vec_id").as("id"), col("embedding").as("v"))
-      // the round-11 Lloyd round: assignment join against UNBOUNDED
-      // broadcast centroids, per-cluster means, driver collect
-      val unboundedCentroids = corpus.filter(col("id") % 50 === 0)
-        .select(col("id").as("centroid_id"), col("v").as("cv"))
-      corpus.join(broadcast(unboundedCentroids))
-        .groupBy(col("centroid_id"))
-        .agg(count(lit(1)).as("n"))
-        .collect()
-      ListenerBridge.drain(spark.sparkContext)
-      assert(!eager.isEmpty,
-        "the eager-execution sweep must flag a Lloyd-round-shaped " +
-          "unbounded broadcast executed at construction time")
-      // green arm: the same eager shape through the BOUNDED seed pick
-      // must pass — the real refineCentroids rounds ride this
-      eager.clear()
+    def eagerFlags(body: => Unit): Seq[String] =
+      QueryMetrics.capture(spark)(body)._2.executions
+        .flatMap(x => PlanGates.unboundedBroadcastHints(x.qe.optimizedPlan))
+    val corpus = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    // the round-11 Lloyd round: assignment join against UNBOUNDED
+    // broadcast centroids, per-cluster means, driver collect
+    val unboundedCentroids = corpus.filter(col("id") % 50 === 0)
+      .select(col("id").as("centroid_id"), col("v").as("cv"))
+    assert(eagerFlags {
+        corpus.join(broadcast(unboundedCentroids))
+          .groupBy(col("centroid_id"))
+          .agg(count(lit(1)).as("n"))
+          .collect()
+      }.nonEmpty,
+      "the eager-execution sweep must flag a Lloyd-round-shaped " +
+        "unbounded broadcast executed at construction time")
+    // green arm: the same eager shape through the BOUNDED seed pick
+    // must pass — the real refineCentroids rounds ride this
+    val flagged = eagerFlags {
       val boundedSeeds = graft.ops.Similarity.ivfSeeds(
         corpus, "id", "v", nCells = 0, "gate-spec-eager")
       corpus.join(broadcast(
@@ -269,9 +239,7 @@ class BroadcastGateSpec extends SparkTestBase {
         .groupBy(col("centroid_id"))
         .agg(count(lit(1)).as("n"))
         .collect()
-      ListenerBridge.drain(spark.sparkContext)
-      assert(eager.isEmpty,
-        s"bounded eager shape falsely flagged: ${eager.asScala.toSeq}")
-    } finally spark.listenerManager.unregister(listener)
+    }
+    assert(flagged.isEmpty, s"bounded eager shape falsely flagged: $flagged")
   }
 }

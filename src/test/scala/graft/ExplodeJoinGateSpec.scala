@@ -1,13 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.ops.QueryMetrics
 
 /** Surface-wide scale gate #5 (round 14 — generalizing the class the
   * round-13 sf10 failure lived in, VERDICT r13 next-round #2): NO query
@@ -108,35 +103,21 @@ class ExplodeJoinGateSpec extends SparkTestBase {
         "broadcast per-source totals - everything is source-dimension " +
         "sized however big the corpus grows"))
 
-  private def offendersOf(names: Seq[String]): Seq[(String, String)] = {
-    val eager = new ConcurrentLinkedQueue[(String, Seq[String])]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        val bad = PlanGates.explodeFedJoinSides(qe.optimizedPlan)
-        if (bad.nonEmpty) eager.add(funcName -> bad)
+  private def offendersOf(names: Seq[String]): Seq[(String, String)] =
+    names.sorted.flatMap { name =>
+      val (df, rec) = QueryMetrics.capture(spark) {
+        try SparkEntry.queries(name)(spark, sf)
+        catch { case e: Throwable =>
+          fail(s"$name failed to build at sf0.001: $e") }
       }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
+      val planned = PlanGates.explodeFedJoinSides(
+        df.queryExecution.optimizedPlan)
+      val eagerBad = rec.executions.flatMap { x =>
+        PlanGates.explodeFedJoinSides(x.qe.optimizedPlan)
+          .map(h => s"eager[${x.funcName}] $h") }
+      val all = planned ++ eagerBad
+      if (all.nonEmpty) Some(name -> all.distinct.mkString(", ")) else None
     }
-    spark.listenerManager.register(listener)
-    try {
-      names.sorted.flatMap { name =>
-        eager.clear()
-        val df =
-          try SparkEntry.queries(name)(spark, sf)
-          catch { case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: $e") }
-        val planned = PlanGates.explodeFedJoinSides(
-          df.queryExecution.optimizedPlan)
-        ListenerBridge.drain(spark.sparkContext)
-        val eagerBad = eager.asScala.toSeq.flatMap { case (fn, hints) =>
-          hints.map(h => s"eager[$fn] $h") }
-        val all = planned ++ eagerBad
-        if (all.nonEmpty) Some(name -> all.distinct.mkString(", ")) else None
-      }
-    } finally spark.listenerManager.unregister(listener)
-  }
 
   test("every explode-fed join side on the query surface is justified — " +
     "including eager index-build plans") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.Similarity
+import graft.ops.{QueryMetrics, Similarity}
 
 /** Physical-plan assertions: the properties that matter at 100 TB —
   * filters reaching the parquet scan, column pruning, broadcast joins for
@@ -18,32 +18,17 @@ class PlanSpec extends SparkTestBase {
   /** Plan text of a QUERY including every plan its construction executed
     * eagerly (Pin.pin subplans — round 16: queries that pin their result
     * before the output sort would otherwise show this gate only a
-    * Sort-over-checkpoint stub; same listener recipe as AggGateSpec). */
+    * Sort-over-checkpoint stub; same capture as AggGateSpec). */
   private def planWithEager(name: String): String = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        // pre-AQE sparkPlan: an EXECUTED AdaptiveSparkPlanExec prints
-        // "final + initial" (every expression twice) — sparkPlan is the
-        // same single tree the non-eager asserts in this suite read
-        plans.add(qe.sparkPlan.toString)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val df = SparkEntry.queries(name)(spark, sf)
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      // distinct: one eager action can fire several listener events for
-      // the same QueryExecution (e.g. localCheckpoint's materialize +
-      // count), which would double-count expression occurrences
-      (plans.asScala.toSeq :+ df.queryExecution.executedPlan.toString)
-        .distinct.mkString("\n")
-    } finally spark.listenerManager.unregister(listener)
+    val (df, rec) = QueryMetrics.capture(spark)(SparkEntry.queries(name)(spark, sf))
+    // pre-AQE sparkPlan: an EXECUTED AdaptiveSparkPlanExec prints "final
+    // + initial" (every expression twice) — sparkPlan is the same single
+    // tree the non-eager asserts in this suite read. distinct: one eager
+    // action can fire several listener events for the same
+    // QueryExecution (e.g. localCheckpoint's materialize + count), which
+    // would double-count expression occurrences
+    (rec.executions.map(_.qe.sparkPlan.toString) :+
+      df.queryExecution.executedPlan.toString).distinct.mkString("\n")
   }
 
   test("q01: predicate pushdown and column pruning reach the parquet scan") {

@@ -6,10 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Patterns `src/main/scala` must not contain, each with the one file
+/** Patterns `src/main/scala` must not contain, each with the files
   * allowed to hold it (if any):
   *  - every main builds its session through [[Session]], so their
   *    settings cannot drift apart again;
+  *  - every measurement goes through [[graft.ops.QueryMetrics]], so no
+  *    main registers a listener of its own; the one exception is
+  *    ChaosKill's kill trigger, which acts on a stage count rather than
+  *    observing;
   *  - pinning holds no global state: kernels free a superseded pin with
   *    `Pin.release` instead of diffing the BlockManager's persisted-RDD
   *    map or remembering a previous call's blocks, and an aligned pin
@@ -17,27 +21,33 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionGuardSpec extends AnyFunSuite {
 
   private case class Guard(what: String, pattern: String,
-      allowedIn: Option[String], fix: String)
+      allowedIn: Seq[String], fix: String)
 
   private val guards = Seq(
     Guard("SparkSession.builder", "SparkSession\\.builder",
-      Some("graft/Session.scala"), "build the session with graft.Session"),
-    Guard("getPersistentRDDs", "getPersistentRDDs", None,
+      Seq("graft/Session.scala"), "build the session with graft.Session"),
+    Guard("listenerManager.register", "listenerManager\\.register",
+      Seq("graft/ops/Observability.scala"),
+      "observe query executions through graft.ops.QueryMetrics.capture"),
+    Guard("addSparkListener", "addSparkListener",
+      Seq("graft/ops/Observability.scala", "graft/ChaosKill.scala"),
+      "observe jobs, stages and tasks through graft.ops.QueryMetrics.capture"),
+    Guard("getPersistentRDDs", "getPersistentRDDs", Nil,
       "release a superseded pin by frame with Pin.release"),
-    Guard("priorLabel", "priorLabel", None,
+    Guard("priorLabel", "priorLabel", Nil,
       "connectedComponents keeps no state between calls"),
-    Guard("the AQE switch", "adaptive\\.enabled|ADAPTIVE_EXECUTION_ENABLED", None,
+    Guard("the AQE switch", "adaptive\\.enabled|ADAPTIVE_EXECUTION_ENABLED", Nil,
       "declare the layout (Pin.pinAligned) instead of flipping AQE for the session"),
-    Guard("explicitlySet", "explicitlySet", None,
+    Guard("explicitlySet", "explicitlySet", Nil,
       "no conf is flipped and restored, so none needs its explicitness read"),
-    Guard("a session lock", "(?i)\\bsess\\w*\\.synchronized|session\\.synchronized", None,
+    Guard("a session lock", "(?i)\\bsess\\w*\\.synchronized|session\\.synchronized", Nil,
       "pinning takes no session-wide lock"))
 
   private val root = Path.of("src/main/scala")
 
   private def hits(g: Guard): List[String] = {
     val re = g.pattern.r
-    val allowed = g.allowedIn.map(root.resolve)
+    val allowed = g.allowedIn.map(root.resolve).toSet
     val walk = Files.walk(root)
     try walk.iterator.asScala
       .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p))
@@ -50,7 +60,9 @@ class SessionGuardSpec extends AnyFunSuite {
   }
 
   guards.foreach { g =>
-    val where = g.allowedIn.fold("nowhere in src/main")(f => s"in src/main only in $f")
+    val where =
+      if (g.allowedIn.isEmpty) "nowhere in src/main"
+      else s"in src/main only in ${g.allowedIn.mkString(" and ")}"
     test(s"${g.what} appears $where") {
       assert(Files.isDirectory(root), s"run from the repo root: $root missing")
       val found = hits(g)

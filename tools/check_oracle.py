@@ -2,6 +2,7 @@
 """Local pre-check of the driver's DuckDB-oracle comparison.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+         [--skip=q220,...] [--only=q47_dedup_apply,q99_pagerank,...]
 
 Mirrors the driver: registers each testdata parquet as a DuckDB view,
 runs every oracle_sql.json query, loads the Spark parquet result, sorts
@@ -9,6 +10,7 @@ columns by name (and rows by all columns), and compares values.
 Dev tool only — the shipped Scala library has no Python dependency.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -33,7 +35,7 @@ def stringify(df):
     return df.astype(str)
 
 
-def main(sf_dir, out_dir, skip=()):
+def main(sf_dir, out_dir, skip=(), only=None):
     con = duckdb.connect()
     # Spill outside the repo: DuckDB's default temp_directory for an
     # in-memory connection is ./.tmp, which once swept 46GB of spill
@@ -44,7 +46,16 @@ def main(sf_dir, out_dir, skip=()):
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = 0
+    if only is not None:
+        # a named query with neither oracle SQL nor a Spark result fails
+        # here; one with oracle SQL fails below as unreadable
+        for name in sorted(n for n in only if n not in oracle
+                           and not os.path.isdir(os.path.join(out_dir, n))):
+            print(f"FAIL {name}: no oracle SQL and no spark result")
+            n_bad += 1
     for name, sql in sorted(oracle.items()):
+        if only is not None and name not in only:
+            continue
         if any(s in name for s in skip):
             print(f"SKIP {name} (--skip)")
             continue
@@ -85,10 +96,11 @@ def main(sf_dir, out_dir, skip=()):
     # rows-only results (no oracle SQL): the driver still loads + sorts them
     # in pandas — a raw array column crashes its checker (round-1 q35), so
     # reproduce that sort here
-    import os
     for name in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, name)
         if name in oracle or not os.path.isdir(path):
+            continue
+        if only is not None and name not in only:
             continue
         try:
             df = pq.read_table(path).to_pandas()
@@ -105,9 +117,13 @@ def main(sf_dir, out_dir, skip=()):
 
 if __name__ == "__main__":
     # --skip=q220,...: contains-match names to leave out — the cluster
-    # lane excludes the embedded-Derby roundtrip (single-JVM by nature)
-    skip = ()
+    # lane excludes the embedded-Derby roundtrip (single-JVM by nature).
+    # --only=q47_dedup_apply,...: exact names, the only queries checked
+    # (oracle and rows-only alike), as in check_goldens.py
+    skip, only = (), None
     for a in sys.argv[3:]:
         if a.startswith("--skip="):
             skip = tuple(s for s in a[len("--skip="):].split(",") if s)
-    sys.exit(main(sys.argv[1], sys.argv[2], skip))
+        elif a.startswith("--only="):
+            only = {q for q in a[len("--only="):].split(",") if q}
+    sys.exit(main(sys.argv[1], sys.argv[2], skip, only))
