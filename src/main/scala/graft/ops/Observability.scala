@@ -153,7 +153,11 @@ object QueryMetrics {
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
-      jobs(j.jobId) = Job(j.jobId, j.time, -1L, prop("callSite.short").getOrElse("?"),
+      // Spark sets `callSite.short` only under `setCallSite`; otherwise
+      // the result stage (the highest id) is named after the call site
+      val callSite = prop("callSite.short")
+        .orElse(j.stageInfos.maxByOption(_.stageId).map(_.name))
+      jobs(j.jobId) = Job(j.jobId, j.time, -1L, callSite.getOrElse("?"),
         prop("spark.job.tags").fold(Set.empty[String])(_.split(",").filter(_.nonEmpty).toSet),
         j.stageIds)
     }

@@ -30,21 +30,13 @@ import graft.ops.Pin.PinSyntax
   * scripts/bills/bills_federal.py, scripts/bills/vote_matching.py,
   * scripts/census/federal_house_districts.py + zip_code_overlap.py. */
 object CivicE2e {
-
-  private def write(dir: Path, name: String, body: String): Unit =
-    Files.writeString(dir.resolve(name), body)
+  import Fixtures.write
 
   private def extractResource(res: String, to: Path): Unit = {
     val in = getClass.getResourceAsStream(res)
     require(in != null, s"packaged resource $res missing from classpath")
     try Files.copy(in, to)
     finally in.close()
-  }
-
-  private def deleteRecursively(p: java.io.File): Unit = {
-    val kids = p.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    p.delete(): Unit
   }
 
   def summary(spark: SparkSession): DataFrame = {
@@ -54,9 +46,7 @@ object CivicE2e {
     // shutdown-hook design accumulated one live Thread + one held temp
     // dir per invocation (three bench passes = three hooks), a real
     // leak for any long-lived server calling this repeatedly
-    val root = Files.createTempDirectory("civic_e2e")
-    try summaryUnder(spark, root)
-    finally deleteRecursively(root.toFile)
+    Fixtures.collectedUnder(spark, "civic_e2e")(summaryUnder(spark, _))
   }
 
   private def summaryUnder(spark: SparkSession, root: Path): DataFrame = {
@@ -206,12 +196,7 @@ object CivicE2e {
           .as("content_hash"))
       .select(lit("vote_events_dropped").as("table"), col("n_rows"),
         col("content_hash"))
-    val out = (perTable :+ droppedRow).reduce(_.unionByName(_))
+    (perTable :+ droppedRow).reduce(_.unionByName(_))
       .orderBy(col("table"))
-    // materialize the 6 summary rows NOW — the caller's frame must not
-    // depend on the temp warehouse parquet, which is deleted on return
-    val rows = out.collect().toIndexedSeq
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), out.schema)
   }
 }

@@ -1,6 +1,5 @@
 package graft.pipelines
 
-import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,20 +31,7 @@ import org.apache.spark.sql.functions._
   * returned frame is a collected LocalRelation, never a plan over the
   * deleted temp fixture files. */
 object CivicOracle {
-
-  private def write(dir: Path, name: String, body: String): Unit =
-    Files.writeString(dir.resolve(name), body): Unit
-
-  private def deleteRecursively(p: java.io.File): Unit = {
-    val kids = p.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    p.delete(): Unit
-  }
-
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame = {
-    val rows = df.collect().toIndexedSeq // fixture-sized: <= 7 rows
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), df.schema)
-  }
+  import Fixtures.write
 
   /** The asOf instant every date in the fixtures is positioned around
     * (matches q219's reference date). */
@@ -57,8 +43,7 @@ object CivicOracle {
     * DuckDB twin recomputes from the same role rows. */
   def peopleResolved(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val root = Files.createTempDirectory("civic_oracle_people")
-    try {
+    Fixtures.collectedUnder(spark, "civic_oracle_people") { root =>
       // sole-role persons (reference :24-25 — returned unconditionally)
       write(root, "baldwin.yml",
         """id: ocd-person/baldwin
@@ -167,11 +152,10 @@ object CivicOracle {
         ("Montana", "MT")).toDF("state_name", "abbreviation")
       val people = CivicPipeline.peopleFromYaml(
         spark, s"$root/*.yml", AsOf, stateNames)
-      materialize(spark,
-        people.select("id", "name", "given_name", "family_name", "chamber",
-            "role_status", "constituent_area_id", "jurisdiction_area_id")
-          .orderBy("id"))
-    } finally deleteRecursively(root.toFile)
+      people.select("id", "name", "given_name", "family_name", "chamber",
+          "role_status", "constituent_area_id", "jurisdiction_area_id")
+        .orderBy("id")
+    }
   }
 
   /** J2/S2/F14/F16 stage: JSON-doc vote events joined to bills on
@@ -182,8 +166,7 @@ object CivicOracle {
     * testdata); option counts and routing are resolution-independent. */
   def voteJoin(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val root = Files.createTempDirectory("civic_oracle_votes")
-    try {
+    Fixtures.collectedUnder(spark, "civic_oracle_votes") { root =>
       write(root, "bill_0001.json",
         """{
           |  "identifier": "HB 102",
@@ -263,8 +246,7 @@ object CivicOracle {
         lit(null).cast("string").as("chamber"),
         lit("dropped").as("routed"),
         lit(0L).as("n_votes"), lit(0L).as("n_yes"), lit(0L).as("n_no"))
-      materialize(spark,
-        keptRows.unionByName(droppedRows).orderBy("identifier"))
-    } finally deleteRecursively(root.toFile)
+      keptRows.unionByName(droppedRows).orderBy("identifier")
+    }
   }
 }

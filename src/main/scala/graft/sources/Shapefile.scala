@@ -36,20 +36,22 @@ object Shapefile {
     require(geoms.length == records.length,
       s"shp has ${geoms.length} shapes but dbf has ${records.length} records")
 
-    val schema = StructType(
-      fields.map { f =>
-        f.fieldType match {
-          case 'N' | 'F' =>
-            if (f.decimals > 0) StructField(f.name, DoubleType) else StructField(f.name, LongType)
-          case _ => StructField(f.name, StringType)
-        }
-      } :+ StructField("geometry", BinaryType))
-
     val rows = records.zip(geoms).map { case (rec, geom) =>
       Row.fromSeq(rec :+ geom)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq), schema(fields))
   }
+
+  /** Row schema for these DBF fields: N/F → Long (Double with decimals),
+    * others → String, then the WKB `geometry` column. */
+  def schema(fields: Seq[DbfField]): StructType =
+    StructType(fields.map { f =>
+      f.fieldType match {
+        case 'N' | 'F' =>
+          if (f.decimals > 0) StructField(f.name, DoubleType) else StructField(f.name, LongType)
+        case _ => StructField(f.name, StringType)
+      }
+    } :+ StructField("geometry", BinaryType))
 
   /** Parse .shp → one WKB per record (null shape → null). */
   private[sources] def readShp(bytes: Array[Byte]): Array[Array[Byte]] = {

@@ -50,13 +50,7 @@ object ShapefileDataSource {
   def schemaFor(shp: Path): StructType = {
     val base = shp.toString.stripSuffix(".shp")
     val (fields, _) = Shapefile.readDbf(Files.readAllBytes(Paths.get(base + ".dbf")))
-    StructType(fields.map { f =>
-      f.fieldType match {
-        case 'N' | 'F' =>
-          if (f.decimals > 0) StructField(f.name, DoubleType) else StructField(f.name, LongType)
-        case _ => StructField(f.name, StringType)
-      }
-    } :+ StructField("geometry", BinaryType))
+    Shapefile.schema(fields)
   }
 }
 

@@ -68,10 +68,12 @@ object Dev {
       println(df.queryExecution.sparkPlan.toString)
       true
     } else {
-      // execute so AQE finalizes, without buffering rows on the driver;
-      // on failure STILL print the plan — the materialized QueryStages
-      // show which exchange was being built when it died
-      val r = scala.util.Try(df.count())
+      // execute the frame's own plan so AQE finalizes the plan printed
+      // (`df.count()` would run a different plan, an aggregate over df),
+      // without buffering rows on the driver; on failure STILL print the
+      // plan — the materialized QueryStages show which exchange was
+      // being built when it died
+      val r = scala.util.Try(df.queryExecution.toRdd.count())
       println(df.queryExecution.executedPlan.toString)
       r.failed.foreach(e => println(s"EXECUTION FAILED: $e"))
       r.isSuccess

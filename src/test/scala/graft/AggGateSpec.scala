@@ -6,8 +6,6 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.catalyst.expressions.{Literal, SpecifiedWindowFrame, RowFrame}
 
-import graft.ops.QueryMetrics
-
 /** Surface-wide scale gate #3 (round 10 — the [[WindowGateSpec]] /
   * [[JoinGateSpec]] recipe applied to the third scale-killer class):
   * NO query on the driver surface may plan an UNBOUNDED-BUFFER
@@ -29,9 +27,8 @@ import graft.ops.QueryMetrics
   * below with a justified GROUP-DOMAIN bound; a whitelisted query that
   * stops planning an offending aggregate fails too (stale entries hide
   * regressions). Sweeps `queryExecution.sparkPlan` — pre-AQE, same as
-  * the other gates. */
+  * the other gates — of the surface built once, in [[Surface]]. */
 class AggGateSpec extends SparkTestBase {
-  private val sf = "/root/testdata/sf0.001"
 
   /** query name → why each group's buffer is bounded by its DOMAIN
     * (not by the row count). Recurring bounds: "document size" is a
@@ -177,30 +174,18 @@ class AggGateSpec extends SparkTestBase {
     // (round-15 ADVICE). The sweep walks every QueryExecution the
     // construction runs (its QueryMetrics capture), via its PRE-AQE
     // sparkPlan (same walk as the planned sweep).
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, mk) =>
-        val (df, rec) = QueryMetrics.capture(spark) {
-          try mk(spark, sf)
-          catch { case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: $e") }
-        }
-        val planned = unexplained(df.queryExecution.sparkPlan)
-        val eager = rec.executions.flatMap(x => unexplained(x.qe.sparkPlan))
-          .map(n => s"eager-$n")
-        val nodes = (planned ++ eager).distinct
-        if (nodes.nonEmpty) Some(name -> nodes.mkString(", ")) else None
+    val offenders = Surface.built.flatMap { case (name, b) =>
+      val planned = unexplained(b.qe.sparkPlan)
+      val eager = b.eager.flatMap(x => unexplained(x.qe.sparkPlan))
+        .map(n => s"eager-$n")
+      val nodes = (planned ++ eager).distinct
+      if (nodes.nonEmpty) Some(name -> nodes.mkString(", ")) else None
     }
-    val unlisted = offenders.filterNot { case (n, _) => bounded.contains(n) }
-    assert(unlisted.isEmpty,
-      s"queries planning an unbounded-buffer aggregate over a row-scale " +
-        s"input:\n${unlisted
-          .map { case (n, j) => s"  $n: $j" }.mkString("\n")}\n— re-express " +
-        "over the Stats.rangePrefixSums/quantiles* construction, cap the " +
-        "buffer (collectMinK/TopKAgg), or whitelist here with a " +
-        "group-domain justification")
-    val stale = bounded.keySet -- offenders.map(_._1).toSet
-    assert(stale.isEmpty,
-      s"stale whitelist entries (no offending aggregate planned anymore): " +
-        s"${stale.mkString(", ")} — remove them so the gate stays honest")
+    PlanGates.assertWhitelist(offenders, bounded.keySet,
+      "planning an unbounded-buffer aggregate over a row-scale input",
+      "re-express over the Stats.rangePrefixSums/quantiles* construction, " +
+        "cap the buffer (collectMinK/TopKAgg), or whitelist here with a " +
+        "group-domain justification",
+      "no offending aggregate planned anymore")
   }
 }

@@ -26,9 +26,11 @@ import graft.ops.QueryMetrics
   * optimized plan; (b) every QueryExecution the construction itself
   * executed, captured by [[QueryMetrics.capture]] (this is the
   * sweep that would have caught round 11's unbounded first-round
-  * centroid broadcast inside `refineCentroids`). */
+  * centroid broadcast inside `refineCentroids`). Both walk the surface
+  * built once, in [[Surface]]; the negative controls plan their own
+  * frames. */
 class BroadcastGateSpec extends SparkTestBase {
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Surface.sf
 
   /** query name → why its non-structurally-provable hinted side is
     * bounded. Entries mirror (and must stay consistent with)
@@ -133,50 +135,32 @@ class BroadcastGateSpec extends SparkTestBase {
 
   test("every explicit broadcast hint on the query surface has a " +
     "provably bounded hinted side — including eager index-build plans") {
-    // per query: unbounded hinted sides (the offense) AND the total
-    // explicit-hint count bounded or not (the whitelist-hygiene
+    // per query: unbounded hinted sides (the offense) AND whether it
+    // plans any explicit hint, bounded or not (the whitelist-hygiene
     // denominator — distinguishes "hint gone" from "hint now bounded")
-    val hintCounts = scala.collection.mutable.Map[String, Int]()
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, mk) =>
-        val (df, rec) = QueryMetrics.capture(spark) {
-          try mk(spark, sf)
-          catch { case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: $e") }
-        }
-        val eager = rec.executions.map(x => x.funcName -> x.qe.optimizedPlan)
-        val planned = PlanGates.unboundedBroadcastHints(
-          df.queryExecution.optimizedPlan)
-        hintCounts(name) = PlanGates.broadcastHintCount(
-          df.queryExecution.optimizedPlan) +
-          eager.map { case (_, p) => PlanGates.broadcastHintCount(p) }.sum
-        val eagerBad = eager.flatMap { case (fn, p) =>
-          PlanGates.unboundedBroadcastHints(p).map(h => s"eager[$fn] $h") }
-        val all = planned ++ eagerBad
-        if (all.nonEmpty) Some(name -> all.distinct.mkString(", ")) else None
+    val built = Surface.built
+    val offenders = built.flatMap { case (name, b) =>
+      val all = PlanGates.optimizedFlags(b)(PlanGates.unboundedBroadcastHints)
+      if (all.nonEmpty) Some(name -> all.mkString(", ")) else None
     }
-    val unlisted = offenders.filterNot { case (n, _) => bounded.contains(n) }
-    assert(unlisted.isEmpty,
-      s"queries forcing a broadcast whose hinted side is not bounded " +
-        s"by construction:\n${unlisted
-          .map { case (n, j) => s"  $n: $j" }.mkString("\n")}\n— bound " +
-        "the hinted side (limit / aggregate / local relation), drop the " +
-        "hint (let stats decide), or whitelist it here with a " +
-        "justification")
+    val hinted = built.collect { case (name, b)
+        if (b.qe +: b.eager.map(_.qe)).exists(qe =>
+          PlanGates.broadcastHintCount(qe.optimizedPlan) > 0) => name }.toSet
     // staleness, BOTH ways (round-13 mandate #5): an entry whose
     // query stopped planning ANY explicit hint is stale in a louder
     // way than one whose hinted side became structurally bounded —
     // name each class separately so the fix is obvious
-    val noHint = bounded.keySet.filter(n => hintCounts.getOrElse(n, 0) == 0)
+    val noHint = bounded.keySet -- hinted
     assert(noHint.isEmpty,
       s"whitelist entries whose query no longer plans ANY explicit " +
         s"broadcast hint (planned or eager): ${noHint.mkString(", ")} — " +
         "the query stopped broadcasting; remove the entries")
-    val stale = bounded.keySet -- offenders.map(_._1).toSet -- noHint
-    assert(stale.isEmpty,
-      s"stale whitelist entries (every hinted side is now structurally " +
-        s"bounded): ${stale.mkString(", ")} — remove them so the gate " +
-        "stays honest")
+    PlanGates.assertWhitelist(offenders, bounded.keySet,
+      "forcing a broadcast whose hinted side is not bounded by construction",
+      "bound the hinted side (limit / aggregate / local relation), drop " +
+        "the hint (let stats decide), or whitelist it here with a " +
+        "justification",
+      "every hinted side is now structurally bounded")
   }
 
   test("negative control: the round-11 fixed-stride seed shape is flagged, " +

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.QueryMetrics
-
 /** Surface-wide scale gate #5 (round 14 — generalizing the class the
   * round-13 sf10 failure lived in, VERDICT r13 next-round #2): NO query
   * may feed a join from an explode whose output cardinality is neither
@@ -20,9 +18,10 @@ import graft.ops.QueryMetrics
   *
   * Same two sweeps as the broadcast gate: the returned frame's
   * optimized plan, plus every eager QueryExecution the construction
-  * runs (index builds, Lloyd rounds, pinned stages). */
+  * runs (index builds, Lloyd rounds, pinned stages), both over the
+  * surface built once, in [[Surface]]. */
 class ExplodeJoinGateSpec extends SparkTestBase {
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Surface.sf
 
   // shared justification prose — the flagged queries are instances of
   // four kernel disciplines, not 33 bespoke shapes
@@ -103,37 +102,17 @@ class ExplodeJoinGateSpec extends SparkTestBase {
         "broadcast per-source totals - everything is source-dimension " +
         "sized however big the corpus grows"))
 
-  private def offendersOf(names: Seq[String]): Seq[(String, String)] =
-    names.sorted.flatMap { name =>
-      val (df, rec) = QueryMetrics.capture(spark) {
-        try SparkEntry.queries(name)(spark, sf)
-        catch { case e: Throwable =>
-          fail(s"$name failed to build at sf0.001: $e") }
-      }
-      val planned = PlanGates.explodeFedJoinSides(
-        df.queryExecution.optimizedPlan)
-      val eagerBad = rec.executions.flatMap { x =>
-        PlanGates.explodeFedJoinSides(x.qe.optimizedPlan)
-          .map(h => s"eager[${x.funcName}] $h") }
-      val all = planned ++ eagerBad
-      if (all.nonEmpty) Some(name -> all.distinct.mkString(", ")) else None
-    }
-
   test("every explode-fed join side on the query surface is justified — " +
     "including eager index-build plans") {
-    val offenders = offendersOf(SparkEntry.queries.keys.toSeq)
-    val unlisted = offenders.filterNot { case (n, _) => justified.contains(n) }
-    assert(unlisted.isEmpty,
-      s"queries joining against an explode-descended side with no " +
-        s"structural bound:\n${unlisted
-          .map { case (n, j) => s"  $n: $j" }.mkString("\n")}\n— cap the " +
-        "pairs inside the explode stage (the prefilter discipline), bound " +
-        "the side structurally, or justify it in this gate's whitelist")
-    val stale = justified.keySet -- offenders.map(_._1).toSet
-    assert(stale.isEmpty,
-      s"stale whitelist entries (no explode-fed join side planned any " +
-        s"more): ${stale.mkString(", ")} — remove them so the gate stays " +
-        "honest")
+    val offenders = Surface.built.flatMap { case (name, b) =>
+      val all = PlanGates.optimizedFlags(b)(PlanGates.explodeFedJoinSides)
+      if (all.nonEmpty) Some(name -> all.mkString(", ")) else None
+    }
+    PlanGates.assertWhitelist(offenders, justified.keySet,
+      "joining against an explode-descended side with no structural bound",
+      "cap the pairs inside the explode stage (the prefilter discipline), " +
+        "bound the side structurally, or justify it in this gate's whitelist",
+      "no explode-fed join side planned any more")
   }
 
   test("negative control: the pre-prefilter q18 candidate shape is " +

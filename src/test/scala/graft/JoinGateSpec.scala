@@ -31,9 +31,9 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * bounded-cardinality justification; a whitelisted query that stops
   * planning an unexplained node fails too (stale entries hide
   * regressions). The sweep inspects `queryExecution.sparkPlan` — the
-  * pre-AQE physical plan; AQE can only narrow a join at runtime. */
+  * pre-AQE physical plan; AQE can only narrow a join at runtime — of
+  * the surface built once, in [[Surface]]. */
 class JoinGateSpec extends SparkTestBase {
-  private val sf = "/root/testdata/sf0.001"
 
   /** query name → why its non-structurally-provable side is bounded. */
   private val bounded: Map[String, String] = Map(
@@ -72,43 +72,29 @@ class JoinGateSpec extends SparkTestBase {
     "q187_gap_fill" ->
       "broadcast side is the calendar-day spine (explode of the 1-row min/max span agg) x distinct event-type dimension - bounded by days-in-span x type cardinality, never row count")
 
-  // shared with AggGateSpec — see PlanGates for the dominance-walk
-  // semantics (the bound must dominate the build side's root)
-  private def boundedByConstruction(side: SparkPlan): Boolean =
-    PlanGates.boundedByConstruction(side)
-
-  /** Offending nodes whose bounded side can NOT be proven structurally. */
+  /** Offending nodes whose bounded side can NOT be proven structurally
+    * (PlanGates' dominance walk: the bound must dominate the side's root). */
   private def unexplained(plan: SparkPlan): Seq[String] = plan.collect {
     case c: CartesianProductExec
-        if !(boundedByConstruction(c.left) || boundedByConstruction(c.right)) =>
+        if !(PlanGates.boundedByConstruction(c.left) ||
+          PlanGates.boundedByConstruction(c.right)) =>
       "CartesianProduct"
-    case b: BroadcastNestedLoopJoinExec if !boundedByConstruction(
+    case b: BroadcastNestedLoopJoinExec if !PlanGates.boundedByConstruction(
         b.buildSide match { case BuildLeft => b.left; case BuildRight => b.right }) =>
       s"BroadcastNestedLoopJoin(${b.joinType})"
   }
 
   test("every cartesian/nested-loop join on the query surface has a " +
     "provably bounded build side") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, mk) =>
-        val df =
-          try mk(spark, sf)
-          catch { case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: $e") }
-        val nodes = unexplained(df.queryExecution.sparkPlan)
-        if (nodes.nonEmpty) Some(name -> nodes.mkString(", ")) else None
+    val offenders = Surface.built.flatMap { case (name, b) =>
+      val nodes = unexplained(b.qe.sparkPlan)
+      if (nodes.nonEmpty) Some(name -> nodes.mkString(", ")) else None
     }
-    val unlisted = offenders.filterNot { case (n, _) => bounded.contains(n) }
-    assert(unlisted.isEmpty,
-      s"queries planning a cartesian/nested-loop join whose build side " +
-        s"is not bounded by construction:\n${unlisted
-          .map { case (n, j) => s"  $n: $j" }.mkString("\n")}\n— give the " +
-        "join equi-keys (blocking/banding), bound the broadcast side, or " +
-        "whitelist it here with a justification")
-    val stale = bounded.keySet -- offenders.map(_._1).toSet
-    assert(stale.isEmpty,
-      s"stale whitelist entries (every nested-loop build side is now " +
-        s"structurally bounded): ${stale.mkString(", ")} — remove them so " +
-        "the gate stays honest")
+    PlanGates.assertWhitelist(offenders, bounded.keySet,
+      "planning a cartesian/nested-loop join whose build side is not " +
+        "bounded by construction",
+      "give the join equi-keys (blocking/banding), bound the broadcast " +
+        "side, or whitelist it here with a justification",
+      "every nested-loop build side is now structurally bounded")
   }
 }

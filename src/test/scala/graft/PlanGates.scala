@@ -7,12 +7,37 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate,
 import org.apache.spark.sql.catalyst.expressions.NamedExpression
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.scalactic.source.Position
+import org.scalatest.Assertions
 
-/** Shared structural machinery for the plan gates ([[JoinGateSpec]],
-  * [[AggGateSpec]]): proofs that a physical subtree's output cardinality
-  * is bounded by CONSTRUCTION — by a constant, a dimension, or the
-  * partition count — rather than by the data volume. */
+/** Shared structural machinery for the plan gates, which walk the query
+  * surface swept once per test run, in [[Surface]]: proofs that a
+  * subtree's output cardinality is bounded by CONSTRUCTION — by a
+  * constant, a dimension, or the partition count — rather than by the
+  * data volume, and the whitelist check every gate ends with. */
 object PlanGates {
+
+  /** `flags` over a built query's returned plan and, labelled with the
+    * action, over each plan its construction executed (both optimized). */
+  def optimizedFlags(b: Surface.Built)(flags: LogicalPlan => Seq[String]): Seq[String] =
+    (flags(b.qe.optimizedPlan) ++ b.eager.flatMap(x =>
+      flags(x.qe.optimizedPlan).map(h => s"eager[${x.funcName}] $h"))).distinct
+
+  /** Every offending query (name → what it plans) must be listed, and
+    * every listed query must still offend: stale entries hide
+    * regressions. `offense` completes "queries ..."; `fix` says what to
+    * do about an unlisted offender; `gone` says why an entry is stale. */
+  def assertWhitelist(offenders: Seq[(String, String)], listed: Set[String],
+      offense: String, fix: String, gone: String)(implicit pos: Position): Unit = {
+    val unlisted = offenders.filterNot { case (n, _) => listed(n) }
+    Assertions.assert(unlisted.isEmpty,
+      s"queries $offense:\n${unlisted
+        .map { case (n, j) => s"  $n: $j" }.mkString("\n")}\n— $fix")
+    val stale = listed -- offenders.map(_._1)
+    Assertions.assert(stale.isEmpty,
+      s"stale whitelist entries ($gone): ${stale.mkString(", ")} — remove " +
+        "them so the gate stays honest")
+  }
 
   /** Grouping columns minted from `spark_partition_id()` — bounded by
     * the partition count, never by the data (the `Stats.rangePrefix*`

@@ -16,9 +16,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
   *
   * The whitelist maps query name → why its windowed frame is bounded.
   * A whitelisted query whose plan STOPS having an unpartitioned window
-  * fails the gate too — stale entries hide regressions. */
+  * fails the gate too — stale entries hide regressions. Both sweeps
+  * walk the optimized plans of the surface built once, in [[Surface]];
+  * the negative control plans its own frame. */
 class WindowGateSpec extends SparkTestBase {
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Surface.sf
 
   private val bounded: Map[String, String] = Map(
     "q148_decile_lift" ->
@@ -37,28 +39,15 @@ class WindowGateSpec extends SparkTestBase {
       "7-day rolling sketch-union frame keyed by calendar DAY, like q188")
 
   test("every unpartitioned window on the query surface sits on a bounded frame") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, mk) =>
-        val df =
-          try mk(spark, sf)
-          catch { case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: $e") }
-        val unpart = df.queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }
-        if (unpart.nonEmpty) Some(name) else None
+    val offenders = Surface.built.flatMap { case (name, b) =>
+      val n = b.qe.optimizedPlan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }.size
+      if (n > 0) Some(name -> s"$n unpartitioned window(s)") else None
     }
-    val unlisted = offenders.filterNot(bounded.contains)
-    assert(unlisted.isEmpty,
-      s"queries planning an unpartitioned window over an unjustified " +
-        s"frame: ${unlisted.mkString(", ")} — either port the cumulative " +
-        "to Stats.rangePrefixSums or whitelist it here with a " +
-        "bounded-cardinality justification")
-    val stale = bounded.keySet -- offenders.toSet
-    assert(stale.isEmpty,
-      s"stale whitelist entries (no unpartitioned window planned " +
-        s"anymore): ${stale.mkString(", ")} — remove them so the gate " +
-        "stays honest")
+    PlanGates.assertWhitelist(offenders, bounded.keySet,
+      "planning an unpartitioned window over an unjustified frame",
+      "either port the cumulative to Stats.rangePrefixSums or whitelist " +
+        "it here with a bounded-cardinality justification",
+      "no unpartitioned window planned anymore")
   }
 
   // Determinism gate (round 10, generalizing the q127 catch): an
@@ -75,30 +64,21 @@ class WindowGateSpec extends SparkTestBase {
   // in-JVM, with no whitelist — there is no legitimate use of an
   // unordered ranking window on this surface.
   test("no order-sensitive window function rides an empty window order") {
-    import org.apache.spark.sql.catalyst.expressions.{WindowExpression, Lag, Lead, NTile}
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, mk) =>
-        val df =
-          try mk(spark, sf)
-          catch { case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: $e") }
-        val bad = df.queryExecution.optimizedPlan.collect {
-          case w: LWindow => w.windowExpressions.flatMap(_.collect {
-            case we: WindowExpression
-                if we.windowSpec.orderSpec.isEmpty &&
-                  (we.windowFunction match {
-                    case _: org.apache.spark.sql.catalyst.expressions.RowNumber => true
-                    case _: org.apache.spark.sql.catalyst.expressions.Rank => true
-                    case _: org.apache.spark.sql.catalyst.expressions.DenseRank => true
-                    case _: NTile => true
-                    case _: Lag => true
-                    case _: Lead => true
-                    case _ => false
-                  }) =>
-              we.windowFunction.prettyName
-          })
-        }.flatten
-        if (bad.nonEmpty) Some(s"$name: ${bad.distinct.mkString(",")}") else None
+    import org.apache.spark.sql.catalyst.expressions.{DenseRank, Lag, Lead,
+      NTile, Rank, RowNumber, WindowExpression}
+    val offenders = Surface.built.flatMap { case (name, b) =>
+      val bad = b.qe.optimizedPlan.collect {
+        case w: LWindow => w.windowExpressions.flatMap(_.collect {
+          case we: WindowExpression
+              if we.windowSpec.orderSpec.isEmpty && (we.windowFunction match {
+                case _: RowNumber | _: Rank | _: DenseRank | _: NTile | _: Lag
+                    | _: Lead => true
+                case _ => false
+              }) =>
+            we.windowFunction.prettyName
+        })
+      }.flatten
+      if (bad.nonEmpty) Some(s"$name: ${bad.distinct.mkString(",")}") else None
     }
     assert(offenders.isEmpty,
       s"queries planning an order-sensitive window function with an " +

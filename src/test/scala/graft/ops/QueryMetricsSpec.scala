@@ -28,6 +28,14 @@ class QueryMetricsSpec extends SparkTestBase {
     assert(rec.jobs.forall(j => j.end >= j.start), rec.jobs)
   }
 
+  test("a job started without a callSite.short property is named after " +
+    "its result stage's call site") {
+    val (_, rec) = QueryMetrics.capture(spark)(spark.range(10).collect())
+    assert(rec.jobs.nonEmpty)
+    assert(rec.jobs.forall(_.callSite.contains("QueryMetricsSpec.scala")),
+      rec.jobs.map(_.callSite))
+  }
+
   test("after a throwing body, a new capture sees none of its executions") {
     // a backlog of events still queued when the body throws
     intercept[IllegalStateException] {
