@@ -24,7 +24,9 @@ import graft.functions._
   * state-blocked path is an equi-join on state, the rare no-state path a
   * broadcast nested-loop against the (small) people table — votes, the
   * big side, never shuffles except for the per-vote top-1 window, which
-  * partitions on vote_id (even, high-cardinality).
+  * partitions on vote_id (even, high-cardinality). Each blocking branch
+  * is joined once: one window over a vote's candidates holds both
+  * passes (see [[resolveVoters]]).
   */
 object EntityResolution {
 
@@ -53,7 +55,15 @@ object EntityResolution {
 
   /** Resolve votes → person ids. One row per input vote: (vote_id,
     * person_id nullable, match_type ∈ exact_full | exact_last | fuzzy |
-    * unmatched, score). */
+    * unmatched, score).
+    *
+    * Both passes are one ranked window over each vote's candidates:
+    * exact hits first (an exact hit scores 100 and beats any fuzzy
+    * score), then score descending, then person_id. The top row wins if
+    * it is an exact hit or its score reaches `threshold`. WRatio is
+    * computed only for votes with no exact-hit candidate (`max` of the
+    * hit flag over the same partition), as in the reference, where the
+    * fuzzy pass runs only after the exact walk found nothing. */
   def resolveVoters(votes: DataFrame, people: DataFrame, threshold: Int = 80): DataFrame = {
     val cands = prepareCandidates(people)
     val v = prepareVotes(votes)
@@ -71,29 +81,26 @@ object EntityResolution {
     val cleanLc = lower(col("clean_name"))
     val fullHit = cleanLc === lower(col("cand_name")) && col("cand_name") =!= ""
     val lastHit = cleanLc === lower(col("cand_last")) && col("cand_last") =!= ""
-
-    // exact pass: first (lowest person_id) candidate hitting either variant
-    val wExact = Window.partitionBy(col("vote_id")).orderBy(col("person_id"))
-    val exact = candidates.filter(fullHit || lastHit)
-      .withColumn("match_type", when(fullHit, "exact_full").otherwise("exact_last"))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") === 1)
-      .select(col("vote_id"), col("person_id"), col("match_type"), lit(100).as("score"))
-
-    // fuzzy pass on the remainder: WRatio over name variants, top-1 ≥ threshold
-    val rest = candidates.join(exact.select("vote_id"), Seq("vote_id"), "left_anti")
-    val scoreExpr = greatest(
+    // WRatio over the name variants; CASE WHEN evaluates it only for
+    // the rows of votes that have no exact hit
+    val fuzzyScore = greatest(
       wRatio(col("clean_name"), col("cand_first_last")),
       wRatio(col("clean_name"), col("cand_name")))
-    val wFuzzy = Window.partitionBy(col("vote_id"))
-      .orderBy(col("score").desc, col("person_id"))
-    val fuzzy = rest.withColumn("score", scoreExpr)
-      .withColumn("rn", row_number().over(wFuzzy))
-      .filter(col("rn") === 1 && col("score") >= threshold)
-      .select(col("vote_id"), col("person_id"),
-        lit("fuzzy").as("match_type"), col("score"))
 
-    val matched = exact.unionByName(fuzzy)
+    val perVote = Window.partitionBy(col("vote_id"))
+    val ranked = perVote.orderBy(col("exact_hit").desc, col("score").desc, col("person_id"))
+    val matched = candidates
+      // a null name is no exact hit; it goes to the fuzzy branch
+      .withColumn("exact_hit", coalesce(fullHit || lastHit, lit(false)))
+      .withColumn("score", when(col("exact_hit"), lit(100))
+        .when(!max(col("exact_hit")).over(perVote), fuzzyScore))
+      .withColumn("rn", row_number().over(ranked))
+      .filter(col("rn") === 1 && (col("exact_hit") || col("score") >= threshold))
+      .select(col("vote_id"), col("person_id"),
+        when(!col("exact_hit"), "fuzzy").when(fullHit, "exact_full")
+          .otherwise("exact_last").as("match_type"),
+        col("score"))
+
     // unmatched votes survive as a queryable warning stream
     // (the reference logs-and-drops, :265-266)
     votes.select("vote_id").join(matched, Seq("vote_id"), "left")

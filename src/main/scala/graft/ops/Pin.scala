@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graftbridge.ContextBridge
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -47,7 +48,9 @@ import org.apache.spark.storage.StorageLevel
   * one call's result survives any later call and kernels may run as
   * [[Par]] arms. A kernel's returned pin is left to the ContextCleaner,
   * like every other frame. Reliable checkpoints never enter the block
-  * store, so there [[release]] is a no-op.
+  * store, so there [[release]] is a no-op. A local pin whose frame
+  * throws while it materializes frees what it had stored before the
+  * exception leaves [[pin]].
   *
   * Both modes materialize the frame ONCE and freeze its rows —
   * anything derived from materialization order (`spark_partition_id`
@@ -73,8 +76,17 @@ object Pin {
     * `spark.graft.checkpoint.dir` is set. */
   def pin[T](ds: Dataset[T]): Dataset[T] = {
     val dir = ds.sparkSession.conf.get(DirConf, "")
-    if (dir == null || dir.isEmpty) ds.localCheckpoint()
-    else {
+    if (dir == null || dir.isEmpty) {
+      // marked lazily, then materialized here, so that a frame whose
+      // materialization throws frees the blocks it had begun to hold
+      // (an eager localCheckpoint that fails leaves its RDD persisted).
+      // The count's job stores every partition; the checkpoint that
+      // runs after it finds them all stored and submits no job.
+      val pinned = ds.localCheckpoint(eager = false)
+      try rddOf(pinned).count()
+      catch { case e: Throwable => release(pinned); throw e }
+      pinned
+    } else {
       val sc = ds.sparkSession.sparkContext
       if (applied == null || (applied._1 ne sc) || applied._2 != dir)
         Pin.synchronized {
@@ -100,6 +112,20 @@ object Pin {
     }
   }
 
+  /** [[pin]], with the bytes the pin's blocks hold as the frame's
+    * size. A pin otherwise keeps the size estimate of the plan it
+    * replaced, and estimates multiply through every join of that plan:
+    * a civic vote batch of a few kilobytes is estimated at over a
+    * thousand terabytes, so a keyed merge against it shuffles the whole
+    * table instead of broadcasting the batch's keys. Reliable
+    * checkpoints hold no blocks; they keep the estimate. */
+  def pinSized[T](ds: Dataset[T]): Dataset[T] = {
+    val pinned = pin(ds)
+    val id = rddOf(pinned).id
+    ds.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == id)
+      .fold(pinned)(i => ColumnBridge.withSizeInBytes(pinned, i.memSize + i.diskSize))
+  }
+
   /** Free the block set behind each pinned frame — a round's pin once
     * the next round supersedes it. A pin's logical plan is a bare
     * `LogicalRDD` whose RDD is exactly the block set the pin added, so
@@ -107,13 +133,15 @@ object Pin {
     * for them this is a no-op. Reading a frame after releasing it
     * fails. */
   def release(frames: Dataset[_]*): Unit = frames.foreach { ds =>
-    ds.queryExecution.logical match {
-      case r: LogicalRDD =>
-        if (r.rdd.getStorageLevel != StorageLevel.NONE)
-          ContextBridge.unpersist(ds.sparkSession.sparkContext, r.rdd.id)
-      case p => throw new IllegalArgumentException(
-        s"Pin.release takes a pinned frame, got ${p.nodeName}")
-    }
+    val rdd = rddOf(ds)
+    if (rdd.getStorageLevel != StorageLevel.NONE)
+      ContextBridge.unpersist(ds.sparkSession.sparkContext, rdd.id)
+  }
+
+  private def rddOf(ds: Dataset[_]): RDD[_] = ds.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd
+    case p => throw new IllegalArgumentException(
+      s"Pin.release takes a pinned frame, got ${p.nodeName}")
   }
 
   /** True when layout-aligned pinning is enabled on this session.

@@ -8,15 +8,20 @@ import org.apache.spark.sql.types._
 
 import graft.functions._
 import graft.geo.SpatialJoin
-import graft.ops.{EntityResolution, RoleResolution}
+import graft.ops.{EntityResolution, Pin, RoleResolution}
+import graft.ops.Pin.PinSyntax
 import graft.sources.{JsonDocs, Shapefile, YamlSource}
 import graft.warehouse.Warehouse
 
 /** The reference's pipelines (SURVEY §3) recomposed as set-oriented
   * Spark jobs over the five warehouse tables. Each builder is
   * DataFrame-in/DataFrame-out; ingestion to the warehouse is a
-  * [[Warehouse.mergeByKey]] at the end — one job per pipeline instead of
-  * the reference's one Postgres round-trip per row.
+  * [[Warehouse.mergeByKey]] at the end, in place of the reference's one
+  * Postgres round-trip per row. A batch is still several Spark jobs (one
+  * per eager pin and per adaptive query stage), but each input is
+  * evaluated once per batch: the vote-event build pins its bill-joined
+  * documents, which two branches read, and [[ingest]] pins the batch,
+  * which the merge reads twice, so the write scans only the table.
   */
 object CivicPipeline {
 
@@ -406,7 +411,10 @@ object CivicPipeline {
       col("session"), col("id").as("bill_id"))
       .select((joinCols :+ "bill_id").map(col): _*)
       .dropDuplicates(joinCols)
-    val kept = raw.join(billKeys, joinCols, "inner")
+    // pinned once: the vote explode and the event-column rejoin both
+    // read it, and unpinned each would re-run the document scan and the
+    // bill join
+    val kept = raw.join(billKeys, joinCols, "inner").pinned
     val dropped = raw.join(billKeys, joinCols, "left_anti")
 
     // per-vote resolution: explode, resolve, re-group preserving order
@@ -465,20 +473,28 @@ object CivicPipeline {
         lit("constituent_area_zip_code").as("relationship_type"))
   }
 
-  /** Merge a built table into the warehouse directory (idempotent). */
+  /** Merge a built table into the warehouse directory (idempotent).
+    * On the merge path the batch is pinned once and released after the
+    * swap: [[Warehouse.mergeByKey]] reads it twice (key anti-join and
+    * union), so an unpinned batch would re-run its whole build in the
+    * write. The pin carries its stored size, so the anti-join can still
+    * broadcast the batch's keys. A first write reads the batch once and
+    * leaves it unpinned. */
   def ingest(spark: SparkSession, tablePath: String, incoming: DataFrame,
       keys: Seq[String]): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val merged =
-      if (fs.exists(hPath))
-        Warehouse.mergeByKey(spark.read.parquet(tablePath), incoming, keys,
-          preserve = Seq("created_at"))
-      else incoming
-    val tmp = tablePath + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    // checked swap (not java.io.File.renameTo, whose silent false-return
-    // no-op loses the merge — see Warehouse.checkedSwapInto)
-    Warehouse.checkedSwapInto(spark, tablePath, tmp)
+    def swapIn(table: DataFrame): Unit = {
+      val tmp = tablePath + ".tmp"
+      table.write.mode("overwrite").parquet(tmp)
+      // checked swap (not java.io.File.renameTo, whose silent false-return
+      // no-op loses the merge — see Warehouse.checkedSwapInto)
+      Warehouse.checkedSwapInto(spark, tablePath, tmp)
+    }
+    if (!Warehouse.liveGeneration(spark, tablePath)) swapIn(incoming)
+    else {
+      val batch = Pin.pinSized(incoming)
+      try swapIn(Warehouse.mergeByKey(spark.read.parquet(tablePath), batch, keys,
+        preserve = Seq("created_at")))
+      finally Pin.release(batch)
+    }
   }
 }

@@ -267,10 +267,8 @@ object EventPipeline {
     * the anti-join side stays shuffle-free. */
   def mergeBatchSink(tablePath: String, keys: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val merged =
-      if (fs.exists(hPath))
+      if (Warehouse.liveGeneration(spark, tablePath))
         Warehouse.mergeByKey(spark.read.parquet(tablePath), batch, keys)
       else batch
     val tmp = tablePath + ".tmp"

@@ -25,8 +25,11 @@ object Warehouse {
     * non-empty `.old` returned false, both renames then no-op'd, and the
     * table stayed on the previous generation with no error). Hadoop
     * rename/delete report failure by returning false — raise instead of
-    * eating data. Single-FS local semantics; an object-store deployment
-    * would version the table instead of renaming. */
+    * eating data. A process killed between the two renames leaves the
+    * previous generation at `.old`; [[liveGeneration]] renames it back
+    * before the next merge reads. Single-FS local semantics; an
+    * object-store deployment would version the table instead of
+    * renaming. */
   def checkedSwapInto(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, tmpPath: String): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(tablePath)
@@ -44,6 +47,24 @@ object Warehouse {
           (if (rolledBack) "previous generation restored"
            else s"ROLLBACK FAILED, previous generation is at $old"))
     }
+  }
+
+  /** Whether `tablePath` holds a table generation, after finishing an
+    * interrupted [[checkedSwapInto]] first: a process that died between
+    * its two renames left the table absent and the previous generation
+    * at `tablePath + ".old"`. That generation is renamed back before the
+    * caller reads; otherwise the next batch would be written as the
+    * whole table and its swap would delete the only copy of the old
+    * rows. */
+  def liveGeneration(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String): Boolean = {
+    val hPath = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val old = new org.apache.hadoop.fs.Path(tablePath + ".old")
+    if (!fs.exists(hPath) && fs.exists(old) && !fs.rename(old, hPath))
+      throw new IllegalStateException(
+        s"could not restore the previous generation from $old")
+    fs.exists(hPath)
   }
 
   /** Last-writer-wins merge of `incoming` into `existing` on `keys`.

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -10,8 +11,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Bridge between the public `Column` API and Catalyst `Expression`s.
   * Spark 4 made the converters `private[sql]`, so third-party expression
   * libraries expose them via a shim in the `org.apache.spark.sql`
-  * package — the standard extension-point pattern. The aligned pin's
-  * Dataset-from-LogicalPlan rebuild lives here for the same reason. */
+  * package — the standard extension-point pattern. The pins'
+  * Dataset-from-LogicalPlan rebuilds live here for the same reason. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -40,5 +41,15 @@ object ColumnBridge {
     val declared = rel.copy(outputPartitioning = HashPartitioning(keyExprs, n))(
       session, Some(rel.computeStats()), Some(rel.constraints))
     new classic.Dataset[T](session, declared, ds.encoder)
+  }
+
+  /** Rebuild the pinned frame `ds` over the same RDD with `sizeInBytes`
+    * as its statistics. Layout and constraints carry over unchanged. */
+  def withSizeInBytes[T](ds: Dataset[T], sizeInBytes: BigInt): Dataset[T] = {
+    val session = ds.sparkSession.asInstanceOf[classic.SparkSession]
+    val rel = ds.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val sized = rel.copy()(session, Some(Statistics(sizeInBytes = sizeInBytes)),
+      Some(rel.constraints))
+    new classic.Dataset[T](session, sized, ds.encoder)
   }
 }

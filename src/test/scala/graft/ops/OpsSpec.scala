@@ -59,6 +59,63 @@ class OpsSpec extends SparkTestBase {
     assert(out(0).getAs[String]("match_type") == "unmatched")
   }
 
+  // The reference's decision order (vote_matching.py:124-168): the
+  // exact walk first, in person order, and only then the fuzzy top-1.
+  private def senators(rows: (String, String, String)*) =
+    rows.map { case (id, name, last) =>
+      (id, name, name.split(" ").head, last, "ocd-division/country:us/state:wi", "Senate")
+    }.toDF("id", "name", "first_name", "last_name", "constituent_area_id", "chamber")
+
+  private def resolveOne(voter: String, cands: org.apache.spark.sql.DataFrame) = {
+    val out = EntityResolution.resolveVoters(
+      Seq((1L, voter, "upper")).toDF("vote_id", "voter_name", "chamber"), cands).collect()
+    assert(out.length == 1)
+    (out(0).getAs[String]("person_id"), out(0).getAs[String]("match_type"))
+  }
+
+  test("entity resolution: an exact last-name hit beats a fuzzy-only candidate " +
+    "with a lower person_id") {
+    val fuzzyOnly = ("p-1", "Baldwinn", "Baldwinn")
+    val exact = ("p-9", "Tammy Baldwin", "Baldwin")
+    // alone, the fuzzy-only candidate is a match
+    assert(resolveOne("Baldwin (D-WI)", senators(fuzzyOnly)) == ("p-1" -> "fuzzy"))
+    assert(resolveOne("Baldwin (D-WI)", senators(fuzzyOnly, exact)) ==
+      ("p-9" -> "exact_last"))
+  }
+
+  test("entity resolution: between two exact hits the lowest person_id wins, " +
+    "with that row's match type") {
+    val lastHit = ("p-1", "Tammy Baldwin", "Baldwin")
+    val fullHit = ("p-2", "Baldwin", "Other")
+    assert(resolveOne("Baldwin (D-WI)", senators(lastHit, fullHit)) ==
+      ("p-1" -> "exact_last"))
+    assert(resolveOne("Baldwin (D-WI)",
+      senators(lastHit.copy(_1 = "p-3"), fullHit)) == ("p-2" -> "exact_full"))
+  }
+
+  test("entity resolution: a vote with no state resolves through the " +
+    "cross-join path, exactly and fuzzily") {
+    val votes = Seq(
+      (1L, "Barrasso", "upper"),       // exact_last: no "(R-WY)" suffix
+      (2L, "Michael Bennet", "upper"), // fuzzy: the full name is "Michael F. Bennet"
+      (3L, "Tammy Baldwn", "upper"),   // fuzzy
+      (4L, "Barrasso", "lower"))       // the chamber still blocks
+      .toDF("vote_id", "voter_name", "chamber")
+    val out = EntityResolution.resolveVoters(votes, people).orderBy("vote_id")
+      .collect().map(r => (r.getAs[String]("person_id"), r.getAs[String]("match_type")))
+    assert(out.toSeq == Seq(
+      ("ocd-person/80f88c07-5f6d-5ca3-8121-9202259a50f2", "exact_last"),
+      ("ocd-person/16a0a125-6ebe-58b3-810f-df10c0e7df1f", "fuzzy"),
+      ("ocd-person/d7c97bc3-b7cb-585b-b9e3-def97fcb9db6", "fuzzy"),
+      (null, "unmatched")))
+  }
+
+  test("entity resolution: a tie on fuzzy score goes to the lowest person_id") {
+    val twins = senators(("p-2", "Tammy Baldwin", "Baldwin"),
+      ("p-1", "Tammy Baldwin", "Baldwin"), ("p-3", "Tammy Baldwin", "Baldwin"))
+    assert(resolveOne("Tammy Baldwn (D-WI)", twins) == ("p-1" -> "fuzzy"))
+  }
+
   private val asOf = Timestamp.valueOf("2026-01-01 00:00:00")
   private def rolesDf(rows: (String, Seq[(String, String, String, String, String)])*) = {
     val data = rows.map { case (id, rs) =>

@@ -48,4 +48,16 @@ class PinReleaseSpec extends SparkTestBase {
 
     intercept[IllegalArgumentException](Pin.release(cc))
   }
+
+  test("a pin whose frame throws while it materializes leaves no block set behind") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    // two partitions: the empty one can complete and store its block
+    // before the other one throws
+    val frame = spark.range(0, 10, 1, 2).select(col("id"),
+      when(col("id") >= 0, raise_error(lit("planted pin failure"))).as("boom"))
+      .filter(col("id") >= 5)
+    val (thrown, left) = added(scala.util.Try(Pin.pin(frame)))
+    assert(thrown.isFailure)
+    assert(left.isEmpty, s"the failed pin left $left")
+  }
 }

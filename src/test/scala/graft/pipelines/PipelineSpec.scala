@@ -3,10 +3,16 @@ package graft.pipelines
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  InsertIntoHadoopFsRelationCommand, LogicalRelation}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.geo.{GeoFunctions, GeoJson}
+import graft.ops.QueryMetrics
 
 /** End-to-end pipeline tests over reference-shaped fixtures (SURVEY §3,
   * FIXTURES.md) — the Spark analog of the reference's only executable
@@ -529,6 +535,94 @@ class PipelineSpec extends SparkTestBase {
     val fin = spark.read.parquet(tbl).collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(fin == Map("a" -> 4, "b" -> 2, "c" -> 2, "d" -> 3, "e" -> 4))
+  }
+
+  // A process that dies between the two renames of the swap leaves the
+  // previous generation at `.old` and no table.
+  test("ingest: a swap interrupted between its renames loses no rows") {
+    val tbl = Files.createTempDirectory("wh").toString + "/areas"
+    CivicPipeline.ingest(spark, tbl, Seq(("a", 1), ("b", 1)).toDF("id", "v"), Seq("id"))
+    Files.move(Paths.get(tbl), Paths.get(tbl + ".old"))
+    CivicPipeline.ingest(spark, tbl, Seq(("c", 2)).toDF("id", "v"), Seq("id"))
+    val fin = spark.read.parquet(tbl).collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(fin == Map("a" -> 1, "b" -> 1, "c" -> 2))
+  }
+
+  test("vote-event ingest on the merge path evaluates its inputs once, " +
+    "broadcasts the batch keys and leaves no block set behind") {
+    val dir = Files.createTempDirectory("mergedocs").toString
+    Files.writeString(Paths.get(dir, "bill_0001.json"),
+      """{"identifier": "HB 102", "title": "An Act", "legislative_session": "119th",
+        | "from_organization": "~{\"classification\": \"upper\"}", "actions": []}"""
+        .stripMargin)
+    Seq(1, 2).foreach { i =>
+      Files.writeString(Paths.get(dir, s"vote_event_000$i.json"),
+        s"""{"identifier": "roll-$i", "legislative_session": "119", "motion_text": "passage",
+          | "start_date": "2025-03-0${i}T12:00:00+00:00", "result": "pass",
+          | "bill": "~{\\"identifier\\": \\"HB 102\\"}",
+          | "organization": "~{\\"classification\\": \\"upper\\"}",
+          | "votes": [{"option": "yes", "voter_name": "Baldwin (D-WI)", "voter_id": "x", "note": ""},
+          |           {"option": "no", "voter_name": "Nobody (D-WI)", "voter_id": "y", "note": ""}]}"""
+          .stripMargin)
+    }
+    val root = Files.createTempDirectory("wh").toString
+    val bills = s"$root/bills"
+    CivicPipeline.ingest(spark, bills,
+      CivicPipeline.billsFromJsonDocs(spark, dir, "ocd-division/country:us"), Seq("id"))
+    val people = Seq(("ocd-person/baldwin", "Tammy Baldwin", "Tammy", "Baldwin",
+      "ocd-division/country:us/state:wi", "Senate"))
+      .toDF("id", "name", "first_name", "last_name", "constituent_area_id", "chamber")
+    def events() = CivicPipeline.voteEventsFromJsonDocs(
+      spark, dir, spark.read.parquet(bills), people)._1
+    val tbl = s"$root/vote_events"
+    CivicPipeline.ingest(spark, tbl, events(), Seq("id")) // first write
+    def generation() = spark.read.parquet(tbl).collect().map(_.toString).sorted.toSeq
+    val first = generation()
+    assert(first.size == 2 && first.forall(_.contains("ocd-person/baldwin")), first)
+    def blockSets() = spark.sparkContext.getPersistentRDDs.keySet
+
+    val (held, rec) = QueryMetrics.capture(spark) {
+      val ev = events()
+      val before = blockSets()
+      CivicPipeline.ingest(spark, tbl, ev, Seq("id"))
+      (before, blockSets())
+    }
+    assert(held._2 == held._1, "the merge left a block set behind")
+    assert(generation() == first, "re-ingesting the same batch changed the table")
+
+    def fsScan(p: LogicalPlan) = p match {
+      case r: LogicalRelation => Some(r.relation).collect { case h: HadoopFsRelation => h }
+      case _ => None
+    }
+    val tablePath = new org.apache.hadoop.fs.Path(tbl).toUri.getPath
+    val writes = rec.executions.filter(_.qe.optimizedPlan.collectFirst {
+      case w: InsertIntoHadoopFsRelationCommand
+        if w.outputPath.toUri.getPath == tablePath + ".tmp" => w
+    }.nonEmpty)
+    assert(writes.size == 1, rec.executions.map(_.funcName))
+    val leaves = writes.head.qe.optimizedPlan.collectLeaves()
+    val foreign = leaves.filter {
+      case _: LogicalRDD => false
+      case p => !fsScan(p).exists(_.location.rootPaths.map(_.toUri.getPath) == Seq(tablePath))
+    }
+    assert(foreign.isEmpty, "the write's plan reads more than the table: " +
+      foreign.map(p => fsScan(p).fold(p.nodeName)(_.location.rootPaths.mkString(","))))
+    // the batch's keys are broadcast: a sort-merge anti-join would
+    // shuffle the whole table on every merge
+    assert(writes.head.qe.sparkPlan.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,
+      writes.head.qe.sparkPlan.treeString)
+    val voteDocScans = rec.executions.flatMap(_.qe.optimizedPlan.collectLeaves().flatMap(fsScan))
+      .count(_.options.get("pathGlobFilter").exists(_.startsWith("vote_event")))
+    assert(voteDocScans == 1, s"vote documents scanned $voteDocScans times")
+
+    // a batch that throws while it is pinned: no swap, no block set
+    val bad = events().withColumn("motion_text", raise_error(lit("planted batch failure")))
+    val before = blockSets()
+    val e = intercept[Exception](CivicPipeline.ingest(spark, tbl, bad, Seq("id")))
+    assert(rootCause(e).getMessage.contains("planted batch failure"), e)
+    assert(blockSets() == before, "the failed merge left a block set behind")
+    assert(generation() == first, "the failed merge changed the table")
   }
 
   // q219 resource contract: repeated summary() calls in one JVM must

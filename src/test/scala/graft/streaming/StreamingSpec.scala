@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -73,6 +73,16 @@ class StreamingSpec extends SparkTestBase {
     val out = spark.read.parquet(dir).orderBy("id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
     assert(out == Seq((1L, "A", 4), (2L, "B", 2), (3L, "C", 3), (4L, "d", 3)))
+  }
+
+  test("foreachBatch merge sink: a swap interrupted between its renames loses no rows") {
+    val dir = Files.createTempDirectory("mergesink").toString + "/tbl"
+    EventPipeline.mergeBatchSink(dir, Seq("id"))(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0)
+    Files.move(Paths.get(dir), Paths.get(dir + ".old"))
+    EventPipeline.mergeBatchSink(dir, Seq("id"))(Seq((3L, "c")).toDF("id", "v"), 1)
+    val out = spark.read.parquet(dir).orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(out == Seq((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
   test("stream-static enrichment picks up a dimension refresh between micro-batches") {
