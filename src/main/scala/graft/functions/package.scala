@@ -171,6 +171,14 @@ package object functions {
   def wRatio(a: Column, b: Column): Column =
     expr2col(WRatioScore(col2expr(a), col2expr(b)))
 
+  /** J1 for one vote against a person_id-sorted candidate roster — see
+    * [[ResolveVote]] for the walk and the roster's fields.
+    * `cleanLower` must be Spark's `lower(clean)`. */
+  def resolveVote(roster: Column, clean: Column, cleanLower: Column,
+      state: Column, chamber: Column, threshold: Int): Column =
+    expr2col(ResolveVote(col2expr(roster), col2expr(clean), col2expr(cleanLower),
+      col2expr(state), col2expr(chamber), threshold))
+
   /** Strip HTML tags, decode the five predefined entities (&amp; last so
     * double-encoded text decodes one level, the standard order), collapse
     * whitespace — the pre-tokenization cleanup for web-scraped training

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
 import graft.functions._
 import graft.geo.SpatialJoin
 import graft.ops.{EntityResolution, Pin, RoleResolution}
-import graft.ops.Pin.PinSyntax
 import graft.sources.{JsonDocs, Shapefile, YamlSource}
 import graft.warehouse.Warehouse
 
@@ -19,9 +18,10 @@ import graft.warehouse.Warehouse
   * [[Warehouse.mergeByKey]] at the end, in place of the reference's one
   * Postgres round-trip per row. A batch is still several Spark jobs (one
   * per eager pin and per adaptive query stage), but each input is
-  * evaluated once per batch: the vote-event build pins its bill-joined
-  * documents, which two branches read, and [[ingest]] pins the batch,
-  * which the merge reads twice, so the write scans only the table.
+  * evaluated once per batch: the vote-event build resolves each event's
+  * ballots inside its own row against a broadcast one-row roster, and
+  * [[ingest]] pins the batch, which the merge reads twice, so the write
+  * scans only the table.
   */
 object CivicPipeline {
 
@@ -381,7 +381,11 @@ object CivicPipeline {
 
   /** Vote events: referential semi-join to known bills (J2; unmatched
     * events become the returned `dropped` frame), then per-vote entity
-    * resolution (J1) rewriting voter_id to the matched person id.
+    * resolution (J1) rewriting voter_id to the matched person id. The
+    * votes array is resolved in place ([[EntityResolution.matchVoter]]
+    * inside a `transform`), so each kept event is one output row with
+    * its own ballots in document order; an unmatched vote keeps its
+    * document voter_id and a null votes array becomes the empty one.
     *
     * `joinOnSession`: the federal pipeline keys the bill lookup on
     * (identifier, session); the state pipeline matches on the bill
@@ -411,40 +415,22 @@ object CivicPipeline {
       col("session"), col("id").as("bill_id"))
       .select((joinCols :+ "bill_id").map(col): _*)
       .dropDuplicates(joinCols)
-    // pinned once: the vote explode and the event-column rejoin both
-    // read it, and unpinned each would re-run the document scan and the
-    // bill join
-    val kept = raw.join(billKeys, joinCols, "inner").pinned
+    val kept = raw.join(billKeys, joinCols, "inner")
     val dropped = raw.join(billKeys, joinCols, "left_anti")
 
-    // per-vote resolution: explode, resolve, re-group preserving order
-    val votes = kept.select(col("id"), col("chamber"),
-      posexplode(col("votes")).as(Seq("pos", "vote")))
-      .withColumn("vote_id", concat(col("id"), lit("#"), col("pos")))
-      .select(col("vote_id"), col("id"), col("pos"),
-        col("vote.option").as("option"),
-        col("vote.voter_name").as("voter_name"),
-        col("vote.voter_id").as("orig_voter_id"),
-        col("vote.note").as("note"),
-        col("chamber"))
-    val resolved = EntityResolution.resolveVoters(
-      votes.select("vote_id", "voter_name", "chamber"), people)
-    val rebuilt = votes.join(resolved.select("vote_id", "person_id"), Seq("vote_id"), "left")
-      .withColumn("voter_id", coalesce(col("person_id"), col("orig_voter_id")))
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("option"),
-        col("voter_name"), col("voter_id"), col("note")))).as("votes_resolved"))
-      .withColumn("votes", transform(col("votes_resolved"),
-        v => struct(v.getField("option").as("option"),
+    // per-vote resolution in place: each event row meets the one-row
+    // roster and rewrites its ballots' voter_id, keeping their order
+    val out = kept.crossJoin(broadcast(EntityResolution.roster(people)))
+      .withColumn("votes", coalesce(
+        transform(col("votes"), v => struct(
+          v.getField("option").as("option"),
           v.getField("voter_name").as("voter_name"),
-          v.getField("voter_id").as("voter_id"),
-          v.getField("note").as("note"))))
-      .drop("votes_resolved")
-    // left join: an event with an empty votes array has no exploded rows,
-    // so an inner join here would silently drop the whole event
-    val out = kept.drop("votes").join(rebuilt, Seq("id"), "left")
-      .withColumn("votes", coalesce(col("votes"), array().cast(
-        "array<struct<option:string,voter_name:string,voter_id:string,note:string>>")))
+          coalesce(EntityResolution.matchVoter(col("roster"),
+            v.getField("voter_name"), col("chamber")).getField("person_id"),
+            v.getField("voter_id")).as("voter_id"),
+          v.getField("note").as("note"))),
+        array().cast(
+          "array<struct<option:string,voter_name:string,voter_id:string,note:string>>")))
       .select("id", "identifier", "session", "motion_text", "start_date",
         "result", "chamber", "bill_id", "votes",
         "motion_classification", "counts", "sources", "extras")

@@ -83,7 +83,7 @@ class AggGateSpec extends SparkTestBase {
     //  - refineCentroids/pqCodebooks' per-cluster (dim, mean) rebuild
     //    list - bounded by the embedding dimension (q102's bound);
     //  - the PPJoin per-document token array (q170's bound);
-    //  - the civic per-vote-event ballot list - chamber-sized.
+    //  - the civic legislator roster row - seat-count-sized.
     "q155_triangles" ->
       "pairSupport per-basket family set (q154 bound), pinned edge derivation",
     "q180_modularity" ->
@@ -117,9 +117,7 @@ class AggGateSpec extends SparkTestBase {
     "q224_knn_index_eval_steered" ->
       "IVF build collect_list of (dim, mean) - bounded by embedding dimension",
     "q219_civic_e2e" ->
-      "per-vote-event ballot list in the eager warehouse build - chamber-sized",
-    "q227_civic_vote_join" ->
-      "per-vote-event ballot list (CivicPipeline rebuild) - chamber-sized",
+      "one row holding the legislator roster (EntityResolution.roster) - bounded by seat count, the same table resolveVoters already broadcast whole",
     "q203_frequent_triples" ->
       "same per-basket family set, Apriori-filtered to frequent items first",
     "q210_rolling_kmv" ->

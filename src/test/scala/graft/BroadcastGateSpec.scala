@@ -128,10 +128,7 @@ class BroadcastGateSpec extends SparkTestBase {
     "q223_knn_index_eval" ->
       "eager pin of the exact self-kNN truth arm - the audit needs the exact twin by design",
     "q224_knn_index_eval_steered" ->
-      "same eager exact-twin pin as q223 (shared knnIndexAudit body) - only the indexed arm's probe budget differs",
-    // pipeline reference lookups
-    "q219_civic_e2e" ->
-      "eager civic pipeline stages broadcast state-FIPS / chamber-map reference tables - fixed ~50-row civic dimensions")
+      "same eager exact-twin pin as q223 (shared knnIndexAudit body) - only the indexed arm's probe budget differs")
 
   test("every explicit broadcast hint on the query surface has a " +
     "provably bounded hinted side — including eager index-build plans") {

@@ -116,6 +116,26 @@ class OpsSpec extends SparkTestBase {
     assert(resolveOne("Tammy Baldwn (D-WI)", twins) == ("p-1" -> "fuzzy"))
   }
 
+  test("entity resolution: a vote whose state has no candidate stays " +
+    "unmatched, with no fallback to other states") {
+    // Baldwin sits for WI; the "(D-NY)" suffix blocks on NY, which has
+    // no candidate, so neither pass may reach across to WI
+    val votes = Seq((1L, "Baldwin (D-NY)", "upper"), (2L, "Tammy Baldwin (D-NY)", "upper"))
+      .toDF("vote_id", "voter_name", "chamber")
+    val out = EntityResolution.resolveVoters(votes, people).orderBy("vote_id").collect()
+    assert(out.map(r => (r.getAs[String]("person_id"), r.getAs[String]("match_type"))).toSeq ==
+      Seq((null, "unmatched"), (null, "unmatched")))
+  }
+
+  test("entity resolution: a null voter name is unmatched") {
+    val votes = Seq((1L, null: String, "upper"), (2L, null: String, null: String))
+      .toDF("vote_id", "voter_name", "chamber")
+    val out = EntityResolution.resolveVoters(votes, people).orderBy("vote_id").collect()
+    assert(out.map(r => (r.getAs[Long]("vote_id"), r.getAs[String]("person_id"),
+      r.getAs[String]("match_type"), r.get(r.fieldIndex("score")))).toSeq ==
+      Seq((1L, null, "unmatched", null), (2L, null, "unmatched", null)))
+  }
+
   private val asOf = Timestamp.valueOf("2026-01-01 00:00:00")
   private def rolesDf(rows: (String, Seq[(String, String, String, String, String)])*) = {
     val data = rows.map { case (id, rs) =>

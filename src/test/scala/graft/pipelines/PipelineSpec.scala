@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{GenerateExec, LogicalRDD}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -549,6 +550,42 @@ class PipelineSpec extends SparkTestBase {
     assert(fin == Map("a" -> 1, "b" -> 1, "c" -> 2))
   }
 
+  test("vote events: a document present twice in one batch keeps its own " +
+    "votes in each copy") {
+    val dir = Files.createTempDirectory("dupdocs").toString
+    Files.writeString(Paths.get(dir, "bill_0001.json"),
+      """{"identifier": "HB 102", "title": "An Act", "legislative_session": "119th",
+        | "from_organization": "~{\"classification\": \"upper\"}", "actions": []}"""
+        .stripMargin)
+    val doc =
+      """{"identifier": "roll-1", "legislative_session": "119", "motion_text": "passage",
+        | "start_date": "2025-03-01T12:00:00+00:00", "result": "pass",
+        | "bill": "~{\"identifier\": \"HB 102\"}",
+        | "organization": "~{\"classification\": \"upper\"}",
+        | "votes": [{"option": "yes", "voter_name": "Baldwin (D-WI)", "voter_id": "x", "note": ""},
+        |           {"option": "no", "voter_name": "Nobody (D-WI)", "voter_id": "y", "note": "n"},
+        |           {"option": "yes", "voter_name": "Tammy Baldwn", "voter_id": "z", "note": ""}]}"""
+        .stripMargin
+    // the same event file twice, as a re-delivered document would land
+    Seq("vote_event_0001.json", "vote_event_0001_copy.json")
+      .foreach(f => Files.writeString(Paths.get(dir, f), doc))
+    val people = Seq(("ocd-person/baldwin", "Tammy Baldwin", "Tammy", "Baldwin",
+      "ocd-division/country:us/state:wi", "Senate"))
+      .toDF("id", "name", "first_name", "last_name", "constituent_area_id", "chamber")
+    val bills = CivicPipeline.billsFromJsonDocs(spark, dir, "ocd-division/country:us")
+    val rows = CivicPipeline.voteEventsFromJsonDocs(spark, dir, bills, people)._1.collect()
+    assert(rows.length == 2)
+    rows.foreach { r =>
+      val votes = r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("votes"))
+        .map(v => (v.getAs[String]("option"), v.getAs[String]("voter_name"),
+          v.getAs[String]("voter_id"), v.getAs[String]("note")))
+      assert(votes == Seq(
+        ("yes", "Baldwin (D-WI)", "ocd-person/baldwin", ""),
+        ("no", "Nobody (D-WI)", "y", "n"),
+        ("yes", "Tammy Baldwn", "ocd-person/baldwin", "")), votes)
+    }
+  }
+
   test("vote-event ingest on the merge path evaluates its inputs once, " +
     "broadcasts the batch keys and leaves no block set behind") {
     val dir = Files.createTempDirectory("mergedocs").toString
@@ -615,6 +652,12 @@ class PipelineSpec extends SparkTestBase {
     val voteDocScans = rec.executions.flatMap(_.qe.optimizedPlan.collectLeaves().flatMap(fsScan))
       .count(_.options.get("pathGlobFilter").exists(_.startsWith("vote_event")))
     assert(voteDocScans == 1, s"vote documents scanned $voteDocScans times")
+    // votes resolve inside their event rows: no execution explodes the
+    // ballots or ranks candidates in a window
+    val perVote = rec.executions.flatMap(x => x.qe.sparkPlan.collect {
+      case p @ (_: WindowExec | _: GenerateExec) => s"${x.funcName}: ${p.nodeName}"
+    })
+    assert(perVote.isEmpty, perVote)
 
     // a batch that throws while it is pinned: no swap, no block set
     val bad = events().withColumn("motion_text", raise_error(lit("planted batch failure")))
