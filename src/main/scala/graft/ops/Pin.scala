@@ -3,9 +3,12 @@ package graft.ops
 import org.apache.spark.SparkContext
 import org.apache.spark.graftbridge.ContextBridge
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage pinning with a deployment-selectable durability mode.
@@ -51,6 +54,11 @@ import org.apache.spark.storage.StorageLevel
   * store, so there [[release]] is a no-op. A local pin whose frame
   * throws while it materializes frees what it had stored before the
   * exception leaves [[pin]].
+  *
+  * [[pinKeyed]] pins a batch that is about to be upserted: the job that
+  * stores it also returns its key tuples and the bytes it stored, so
+  * the upsert drops those keys from the table with a literal filter
+  * and sizes its write without planning a join against the batch.
   *
   * Both modes materialize the frame ONCE and freeze its rows —
   * anything derived from materialization order (`spark_partition_id`
@@ -112,18 +120,39 @@ object Pin {
     }
   }
 
-  /** [[pin]], with the bytes the pin's blocks hold as the frame's
-    * size. A pin otherwise keeps the size estimate of the plan it
-    * replaced, and estimates multiply through every join of that plan:
-    * a civic vote batch of a few kilobytes is estimated at over a
-    * thousand terabytes, so a keyed merge against it shuffles the whole
-    * table instead of broadcasting the batch's keys. Reliable
-    * checkpoints hold no blocks; they keep the estimate. */
-  def pinSized[T](ds: Dataset[T]): Dataset[T] = {
-    val pinned = pin(ds)
-    val id = rddOf(pinned).id
-    ds.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == id)
-      .fold(pinned)(i => ColumnBridge.withSizeInBytes(pinned, i.memSize + i.diskSize))
+  /** A pinned frame, the key tuples of its rows and the bytes its
+    * blocks hold ([[pinKeyed]]). */
+  final case class Keyed[T](frame: Dataset[T], keys: Seq[Row], storedBytes: Long)
+
+  /** [[pin]] that also hands back each row's tuple of the `keys`
+    * columns, in row order and with repeats, skipping tuples with a null
+    * field. In local mode the frame is marked for `localCheckpoint`
+    * lazily and one job over the pinned RDD stores every block and
+    * returns the tuples, freeing what it stored if it throws;
+    * `storedBytes` is what those blocks hold. In reliable mode the
+    * frame is checkpointed and a second job reads the tuples back;
+    * checkpoints hold no blocks, so `storedBytes` is 0. The tuples are
+    * collected to the driver, so they must fit in its memory. */
+  def pinKeyed[T](ds: Dataset[T], keys: Seq[String]): Keyed[T] = {
+    val dir = ds.sparkSession.conf.get(DirConf, "")
+    val pinned = if (dir == null || dir.isEmpty) ds.localCheckpoint(eager = false) else pin(ds)
+    val schema = pinned.schema
+    val keyType = StructType(keys.map(k => schema(k)))
+    val refs = keys.map { k =>
+      val i = schema.fieldIndex(k)
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+    val rdd = rddOf(pinned).asInstanceOf[RDD[InternalRow]]
+    val tuples =
+      try rdd.mapPartitions { rows =>
+        val project = UnsafeProjection.create(refs)
+        rows.map(project(_)).filterNot(_.anyNull).map(_.copy())
+      }.collect()
+      catch { case e: Throwable => release(pinned); throw e }
+    val toRow = CatalystTypeConverters.createToScalaConverter(keyType)
+    val bytes = ds.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+      .fold(0L)(i => i.memSize + i.diskSize)
+    Keyed(pinned, tuples.toSeq.map(t => toRow(t).asInstanceOf[Row]), bytes)
   }
 
   /** Free the block set behind each pinned frame — a round's pin once

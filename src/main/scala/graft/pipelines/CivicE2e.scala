@@ -164,17 +164,14 @@ object CivicE2e {
     val edges = CivicPipeline.personZipEdges(people, areas, cellSize = 5.0)
 
     val wh = root.resolve("warehouse").toString
-    // fixture-scale frames ride ONE partition each: a 32-partition
-    // parquet write of a five-row table is 31 empty tasks per ingest
-    // (production callers pass full-size frames and skip the coalesce)
-    CivicPipeline.ingest(spark, s"$wh/areas", areas.coalesce(1), Seq("id"))
-    CivicPipeline.ingest(spark, s"$wh/people", people.coalesce(1), Seq("id"))
-    CivicPipeline.ingest(spark, s"$wh/bills", bills.coalesce(1), Seq("id"))
+    CivicPipeline.ingest(spark, s"$wh/areas", areas, Seq("id"))
+    CivicPipeline.ingest(spark, s"$wh/people", people, Seq("id"))
+    CivicPipeline.ingest(spark, s"$wh/bills", bills, Seq("id"))
     // second identical ingest: K1 upsert through the checked-FS swap —
     // idempotence means the fingerprint below cannot move
-    CivicPipeline.ingest(spark, s"$wh/bills", bills.coalesce(1), Seq("id"))
-    CivicPipeline.ingest(spark, s"$wh/vote_events", events.coalesce(1), Seq("id"))
-    CivicPipeline.ingest(spark, s"$wh/person_area_edges", edges.coalesce(1),
+    CivicPipeline.ingest(spark, s"$wh/bills", bills, Seq("id"))
+    CivicPipeline.ingest(spark, s"$wh/vote_events", events, Seq("id"))
+    CivicPipeline.ingest(spark, s"$wh/person_area_edges", edges,
       Seq("person_id", "area_id"))
 
     val tables = Seq("areas", "people", "bills", "vote_events",

@@ -11,9 +11,14 @@ import org.apache.spark.sql.functions._
   * overwrite).
   *
   * Scale notes: both operators are single-shuffle on the key columns.
-  * `mergeByKey` is the `foreachBatch` body for incremental refresh; at
+  * `mergeByKey` is the lazy operator, for callers with no materialized
+  * batch (the `foreachBatch` body for incremental refresh, q08); at
   * cluster scale the existing side would be a bucketed table so the join
-  * is shuffle-free on the big side.
+  * is shuffle-free on the big side. A materialized batch upserts through
+  * [[graft.pipelines.CivicPipeline.ingest]] instead, which joins nothing:
+  * it collects the batch's keys to the driver and filters the table by
+  * them, so that path is bounded by the batch's key set fitting in
+  * driver memory.
   */
 object Warehouse {
 
@@ -71,22 +76,27 @@ object Warehouse {
     * Columns listed in `preserve` (e.g. `created_at`) keep the existing
     * row's value when the key already exists. Schemas must match. */
   def mergeByKey(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
-      preserve: Seq[String] = Seq.empty): DataFrame = {
-    val pres = preserve.filter(c => existing.columns.contains(c) && incoming.columns.contains(c))
-    val incomingResolved =
-      if (pres.isEmpty) incoming
-      else {
-        val old = existing.select((keys ++ pres).map(c => col(c).as(s"__old_$c")): _*)
-        val joinCond = keys.map(k => incoming(k) === old(s"__old_$k")).reduce(_ && _)
-        val joined = incoming.join(old, joinCond, "left")
-        val cols = incoming.columns.map { c =>
-          if (pres.contains(c)) coalesce(col(s"__old_$c"), incoming(c)).as(c)
-          else incoming(c).as(c)
-        }
-        joined.select(cols.toIndexedSeq: _*)
-      }
+      preserve: Seq[String] = Seq.empty): DataFrame =
     existing.join(incoming.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(incomingResolved)
+      .unionByName(withPreserved(existing, incoming, keys, preserve))
+
+  /** `incoming` with each column of `preserve` that both sides carry
+    * taken from the `existing` row of the same key, where there is one.
+    * Without such a column, `incoming` itself. */
+  def withPreserved(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
+      preserve: Seq[String]): DataFrame = {
+    val pres = preserve.filter(c => existing.columns.contains(c) && incoming.columns.contains(c))
+    if (pres.isEmpty) incoming
+    else {
+      val old = existing.select((keys ++ pres).map(c => col(c).as(s"__old_$c")): _*)
+      val joinCond = keys.map(k => incoming(k) === old(s"__old_$k")).reduce(_ && _)
+      val joined = incoming.join(old, joinCond, "left")
+      val cols = incoming.columns.map { c =>
+        if (pres.contains(c)) coalesce(col(s"__old_$c"), incoming(c)).as(c)
+        else incoming(c).as(c)
+      }
+      joined.select(cols.toIndexedSeq: _*)
+    }
   }
 
   /** Write a frame as a bucketed (+ per-bucket sorted) managed table —

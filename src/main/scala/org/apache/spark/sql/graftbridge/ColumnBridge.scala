@@ -1,12 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, Dataset}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bridge between the public `Column` API and Catalyst `Expression`s.
   * Spark 4 made the converters `private[sql]`, so third-party expression
@@ -43,13 +43,12 @@ object ColumnBridge {
     new classic.Dataset[T](session, declared, ds.encoder)
   }
 
-  /** Rebuild the pinned frame `ds` over the same RDD with `sizeInBytes`
-    * as its statistics. Layout and constraints carry over unchanged. */
-  def withSizeInBytes[T](ds: Dataset[T], sizeInBytes: BigInt): Dataset[T] = {
-    val session = ds.sparkSession.asInstanceOf[classic.SparkSession]
-    val rel = ds.queryExecution.logical.asInstanceOf[LogicalRDD]
-    val sized = rel.copy()(session, Some(Statistics(sizeInBytes = sizeInBytes)),
-      Some(rel.constraints))
-    new classic.Dataset[T](session, sized, ds.encoder)
-  }
+  /** A literal of `dataType` holding the external value `value` — a
+    * `Row` for a struct, which `lit` does not take. */
+  def literal(value: Any, dataType: DataType): Column = column(Literal.create(value, dataType))
+
+  /** `t` with every field, element and value nullable, as a file source
+    * reports the schema it read (`StructType.asNullable` is
+    * `private[spark]`). */
+  def asNullable(t: StructType): StructType = t.asNullable
 }

@@ -7,7 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{GenerateExec, LogicalRDD}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   InsertIntoHadoopFsRelationCommand, LogicalRelation}
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
@@ -587,7 +589,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("vote-event ingest on the merge path evaluates its inputs once, " +
-    "broadcasts the batch keys and leaves no block set behind") {
+    "plans no join or exchange and leaves no block set behind") {
     val dir = Files.createTempDirectory("mergedocs").toString
     Files.writeString(Paths.get(dir, "bill_0001.json"),
       """{"identifier": "HB 102", "title": "An Act", "legislative_session": "119th",
@@ -645,10 +647,13 @@ class PipelineSpec extends SparkTestBase {
     }
     assert(foreign.isEmpty, "the write's plan reads more than the table: " +
       foreign.map(p => fsScan(p).fold(p.nodeName)(_.location.rootPaths.mkString(","))))
-    // the batch's keys are broadcast: a sort-merge anti-join would
-    // shuffle the whole table on every merge
-    assert(writes.head.qe.sparkPlan.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,
-      writes.head.qe.sparkPlan.treeString)
+    // the batch's keys drop from the table as a literal filter: the
+    // write joins nothing and moves no row between tasks, so it is not
+    // even an adaptive plan (whose final plan the walk also enters)
+    val planned = new AdaptiveSparkPlanHelper {}.collect(writes.head.qe.executedPlan) {
+      case p @ (_: BaseJoinExec | _: Exchange | _: AdaptiveSparkPlanExec) => p.nodeName
+    }
+    assert(planned.isEmpty, writes.head.qe.executedPlan.treeString)
     val voteDocScans = rec.executions.flatMap(_.qe.optimizedPlan.collectLeaves().flatMap(fsScan))
       .count(_.options.get("pathGlobFilter").exists(_.startsWith("vote_event")))
     assert(voteDocScans == 1, s"vote documents scanned $voteDocScans times")
@@ -666,6 +671,35 @@ class PipelineSpec extends SparkTestBase {
     assert(rootCause(e).getMessage.contains("planted batch failure"), e)
     assert(blockSets() == before, "the failed merge left a block set behind")
     assert(generation() == first, "the failed merge changed the table")
+  }
+
+  test("ingest refuses a batch that carries one key twice, before any swap") {
+    val tbl = Files.createTempDirectory("wh").toString + "/areas"
+    CivicPipeline.ingest(spark, tbl, Seq(("a", 1)).toDF("id", "v"), Seq("id"))
+    def generation() = spark.read.parquet(tbl).collect().map(_.toString).sorted.toSeq
+    val first = generation()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // null keys are exempt, as in the anti-join: only "b" repeats
+    val twice = Seq(("b", 1), (null, 2), ("b", 2), (null, 3)).toDF("id", "v")
+    val e = intercept[IllegalArgumentException](
+      CivicPipeline.ingest(spark, tbl, twice, Seq("id")))
+    assert(e.getMessage.contains("(id=b)"), e.getMessage)
+    assert(generation() == first, "the refused batch changed the table")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the refused batch left a block set behind")
+  }
+
+  test("ingest upserts a built batch into a table in two jobs and one file") {
+    val tbl = Files.createTempDirectory("wh").toString + "/areas"
+    // a table of four files, and a batch built from a local relation
+    (0 until 40).map(i => (s"k$i", i)).toDF("id", "v").repartition(4).write.parquet(tbl)
+    val batch = (30 until 50).map(i => (s"k$i", -i)).toDF("id", "v")
+    val (_, rec) = QueryMetrics.capture(spark)(CivicPipeline.ingest(spark, tbl, batch, Seq("id")))
+    assert(rec.jobs.size == 2, rec.jobs.map(_.callSite))
+    val parts = new java.io.File(tbl).list().filter(_.startsWith("part-"))
+    assert(parts.length == 1, parts.toSeq)
+    val fin = spark.read.parquet(tbl).collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(fin == (0 until 50).map(i => s"k$i" -> (if (i < 30) i else -i)).toMap)
   }
 
   // q219 resource contract: repeated summary() calls in one JVM must
