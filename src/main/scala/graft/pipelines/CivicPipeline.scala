@@ -2,34 +2,27 @@ package graft.pipelines
 
 import java.sql.Timestamp
 
-import scala.collection.mutable
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.functions._
 import graft.geo.SpatialJoin
-import graft.ops.{EntityResolution, Pin, RoleResolution}
+import graft.ops.{EntityResolution, RoleResolution}
 import graft.sources.{JsonDocs, Shapefile, YamlSource}
 import graft.warehouse.Warehouse
 
 /** The reference's pipelines (SURVEY §3) recomposed as set-oriented
   * Spark jobs over the five warehouse tables. Each builder is
-  * DataFrame-in/DataFrame-out; ingestion to the warehouse is a
-  * [[Warehouse.mergeByKey]] at the end, in place of the reference's one
-  * Postgres round-trip per row. A batch is still several Spark jobs (one
-  * per eager pin and per adaptive query stage), but each input is
-  * evaluated once per batch: the vote-event build resolves each event's
-  * ballots inside its own row against a broadcast one-row roster, and
-  * [[ingest]] upserts a batch in two jobs, the pin that also returns
-  * the batch's keys and the write, which scans only the table and the
-  * pin and plans no join.
+  * DataFrame-in/DataFrame-out; ingestion to the warehouse is one
+  * [[Warehouse.upsert]] per table at the end, in place of the
+  * reference's one Postgres round-trip per row. A batch is still several
+  * Spark jobs (one per eager pin and per adaptive query stage), but each
+  * input is evaluated once per batch: the vote-event build resolves each
+  * event's ballots inside its own row against a broadcast one-row
+  * roster, and the upsert takes two jobs, the pin that also returns the
+  * batch's keys and the write, which scans only the table and the pin
+  * and plans no join.
   */
 object CivicPipeline {
 
@@ -100,7 +93,7 @@ object CivicPipeline {
   /** The person JSONB/passthrough columns every people pipeline carries to
     * the warehouse (reference models.py:67-73; other_names flattens to the
     * name list exactly like people_federal.py:116). */
-  private val personDocColumns: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+  private val personDocColumns: Seq[(String, Column)] = Seq(
     "other_names" -> transform(col("other_names"), o => o.getField("name")),
     "image" -> col("image"),
     "ids" -> col("ids"),
@@ -154,7 +147,7 @@ object CivicPipeline {
       .select(outCols.head, outCols.tail: _*)
   }
 
-  private def lower_(c: org.apache.spark.sql.Column) = lower(c)
+  private def lower_(c: Column) = lower(c)
 
   /** States whose district naming scheme has no area-id mapping yet, plus
     * `us` (handled by the federal pipeline)
@@ -467,99 +460,7 @@ object CivicPipeline {
         lit("constituent_area_zip_code").as("relationship_type"))
   }
 
-  /** Upsert a built batch into the warehouse directory `tablePath` on
-    * `keys` (idempotent, last writer wins; reference: the keyed
-    * `INSERT … ON CONFLICT DO UPDATE` of database.py:52-73) in two jobs:
-    *
-    *  1. [[Pin.pinKeyed]] pins the batch, and its job returns the
-    *     batch's key tuples. A non-null key tuple present twice is
-    *     refused, naming the key, before anything is written, as a bulk
-    *     `ON CONFLICT DO UPDATE` refuses to touch one row twice.
-    *  2. The write of the new generation. The live table is read with
-    *     the schema Spark wrote into its own parquet footer, so no
-    *     schema-inference job runs. It keeps every row with a null key
-    *     field or a key tuple outside the batch's set (a literal `IN`
-    *     filter with the anti-join's null semantics), unioned by name
-    *     with the batch, so a schema mismatch fails in `unionByName`.
-    *     The result is written as one file per
-    *     `spark.sql.files.maxPartitionBytes` of table bytes on disk plus
-    *     batch bytes stored, and swapped in by
-    *     [[Warehouse.checkedSwapInto]].
-    *
-    * A first write takes the same path with no table. A preserved column
-    * (`created_at`) that both sides carry is taken from the table rows
-    * of the batch's own keys, which adds a join. The pin is released
-    * whether or not the swap happened. The batch's key set is held on
-    * the driver, so it must fit in driver memory: the same bound as a
-    * merge that broadcasts the batch's keys to every task. */
+  /** [[Warehouse.upsert]], kept under this name for the perfbench harness. */
   def ingest(spark: SparkSession, tablePath: String, incoming: DataFrame,
-      keys: Seq[String]): Unit = {
-    val live = Warehouse.liveGeneration(spark, tablePath)
-    val batch = Pin.pinKeyed(incoming, keys)
-    try {
-      refuseRepeatedKeys(tablePath, keys, batch.keys)
-      val (merged, tableBytes) =
-        if (!live) (batch.frame, 0L)
-        else {
-          val (table, bytes) = readGeneration(spark, tablePath)
-          val owned = ownedBy(keys, batch.keys, StructType(keys.map(batch.frame.schema(_))))
-          (table.filter(!owned).unionByName(Warehouse.withPreserved(table.filter(owned),
-            batch.frame, keys, preserve = Seq("created_at"))), bytes)
-        }
-      val split = spark.sessionState.conf.filesMaxPartitionBytes
-      val files = math.max(1L, (tableBytes + batch.storedBytes + split - 1) / split)
-      val tmp = tablePath + ".tmp"
-      merged.coalesce(files.toInt).write.mode("overwrite").parquet(tmp)
-      // checked swap (not java.io.File.renameTo, whose silent false-return
-      // no-op loses the merge — see Warehouse.checkedSwapInto)
-      Warehouse.checkedSwapInto(spark, tablePath, tmp)
-    } finally Pin.release(batch.frame)
-  }
-
-  private def refuseRepeatedKeys(tablePath: String, keys: Seq[String],
-      tuples: Seq[Row]): Unit = {
-    val seen = mutable.HashSet.empty[Row]
-    tuples.find(!seen.add(_)).foreach { t =>
-      throw new IllegalArgumentException(
-        s"batch for $tablePath carries key " +
-          keys.zip(t.toSeq).map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")") +
-          " more than once")
-    }
-  }
-
-  /** True on a row whose key fields are all non-null and whose key tuple
-    * is one of `tuples` (of type `keyType`); false on every other row. */
-  private def ownedBy(keys: Seq[String], tuples: Seq[Row], keyType: StructType): Column = {
-    val member =
-      if (tuples.isEmpty) lit(false)
-      else if (keys.size == 1) col(keys.head).isInCollection(tuples.map(_.get(0)))
-      else struct(keys.map(col): _*)
-        .isInCollection(tuples.map(ColumnBridge.literal(_, keyType)))
-    keys.map(col(_).isNotNull).reduce(_ && _) && member
-  }
-
-  /** The live generation at `tablePath`, read with [[footerSchema]] of
-    * its first part file, and the bytes its part files hold. */
-  private def readGeneration(spark: SparkSession, tablePath: String): (DataFrame, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(tablePath)
-    val parts = dir.getFileSystem(conf).listStatus(dir)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
-    val reader = parts.headOption.flatMap(f => footerSchema(conf, f.getPath))
-      .fold(spark.read)(spark.read.schema(_))
-    (reader.parquet(tablePath), parts.map(_.getLen).sum)
-  }
-
-  /** The row schema Spark wrote into the footer of the parquet file
-    * `file` (key `org.apache.spark.sql.parquet.row.metadata`), made
-    * nullable as Spark's own read reports it, or None for a file written
-    * without it. */
-  private[pipelines] def footerSchema(conf: Configuration, file: Path): Option[StructType] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata"))
-      .map(json => ColumnBridge.asNullable(DataType.fromJson(json).asInstanceOf[StructType]))
-    finally reader.close()
-  }
+      keys: Seq[String]): Unit = Warehouse.upsert(spark, tablePath, incoming, keys)
 }

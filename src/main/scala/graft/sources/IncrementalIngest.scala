@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * accepted residual blind spot). Processing is at-least-once: the
   * ledger commit runs only after the caller's write succeeds, so a
   * crash in between re-processes that batch on the next run —
-  * idempotent sinks ([[graft.warehouse.Warehouse.mergeByKey]]) absorb
+  * idempotent sinks ([[graft.warehouse.Warehouse.upsert]]) absorb
   * the replay.
   *
   * Scale shape: the ledger (one row per file EVER ingested — years of

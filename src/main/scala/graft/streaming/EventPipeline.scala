@@ -261,22 +261,17 @@ object EventPipeline {
     sink(batch.join(broadcast(dim), keys, joinType), batchId)
   }
 
-  /** foreachBatch body: merge a micro-batch into the keyed table at
-    * `tablePath` (create on first batch). Parquet overwrite of the merged
-    * result — at cluster scale this table would be bucketed by the key so
-    * the anti-join side stays shuffle-free. */
-  def mergeBatchSink(tablePath: String, keys: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val merged =
-      if (Warehouse.liveGeneration(spark, tablePath))
-        Warehouse.mergeByKey(spark.read.parquet(tablePath), batch, keys)
-      else batch
-    val tmp = tablePath + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    // every FS step checked — unchecked swaps are how merge sinks eat
-    // data (see Warehouse.checkedSwapInto for the found-bug history)
-    Warehouse.checkedSwapInto(spark, tablePath, tmp)
-  }
+  /** foreachBatch body: upsert a micro-batch into the keyed parquet
+    * table at `tablePath` (created on the first batch) with
+    * [[Warehouse.upsert]], in two jobs: the pin of the micro-batch,
+    * which also returns its keys, and the write. A micro-batch that
+    * carries one key twice is refused before anything is written: the
+    * query stops on the `IllegalArgumentException` naming the key, the
+    * table keeps its previous generation, and a replay of that batch
+    * from the checkpoint is refused again. Feed it keyed aggregates or
+    * dedupe upstream. */
+  def mergeBatchSink(tablePath: String, keys: Seq[String])(batch: DataFrame, batchId: Long): Unit =
+    Warehouse.upsert(batch.sparkSession, tablePath, batch, keys)
 
   /** foreachBatch body: keyed upsert of each micro-batch into a JDBC
     * warehouse table — [[graft.sources.Jdbc.upsertByKey]] composed onto
@@ -315,13 +310,15 @@ object EventPipeline {
   def dedupIngestSink(corpusPath: String, idCol: String, textCol: String,
       threshold: Double = 0.5)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    val hPath = new org.apache.hadoop.fs.Path(corpusPath)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val inBatchPairs = graft.ops.Dedup.minHashPairs(
       batch, idCol, textCol, threshold = threshold)
     val selfDeduped = graft.ops.Dedup.applyDedup(
       batch, idCol, inBatchPairs.cache())
     inBatchPairs.unpersist()
     val survivors =
-      if (new java.io.File(corpusPath).exists())
+      if (fs.exists(hPath))
         graft.ops.Dedup.dedupAgainstCorpus(
           spark.read.parquet(corpusPath), selfDeduped, idCol, textCol, threshold)
       else selfDeduped

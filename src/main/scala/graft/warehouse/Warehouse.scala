@@ -1,8 +1,18 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.ops.Pin
 
 /** Keyed merge ("upsert") semantics of the reference's generic sink,
   * re-expressed as set-oriented batch operations
@@ -10,19 +20,113 @@ import org.apache.spark.sql.functions._
   * (pks) DO UPDATE SET all non-PK columns, `created_at` excluded from
   * overwrite).
   *
-  * Scale notes: both operators are single-shuffle on the key columns.
-  * `mergeByKey` is the lazy operator, for callers with no materialized
-  * batch (the `foreachBatch` body for incremental refresh, q08); at
-  * cluster scale the existing side would be a bucketed table so the join
-  * is shuffle-free on the big side. A materialized batch upserts through
-  * [[graft.pipelines.CivicPipeline.ingest]] instead, which joins nothing:
-  * it collects the batch's keys to the driver and filters the table by
-  * them, so that path is bounded by the batch's key set fitting in
-  * driver memory.
+  * Scale notes: every table generation is written by [[upsert]] (the
+  * civic batches and every stream sink) or [[compact]], and both swap
+  * it in through [[checkedSwapInto]]. `upsert` joins nothing: it
+  * collects the batch's keys to the driver and filters the table by
+  * them, so it is bounded by the batch's key set fitting in driver
+  * memory. [[mergeByKey]] is the lazy operator, single-shuffle on the
+  * key columns, for a caller with no materialized batch (q08); at
+  * cluster scale its existing side would be a bucketed table so the
+  * join is shuffle-free on the big side.
   */
 object Warehouse {
 
-  /** Checked tmp→live directory swap for parquet table generations.
+  /** Upsert a built batch into the parquet table at `tablePath` on
+    * `keys` (idempotent, last writer wins; reference: the keyed
+    * `INSERT … ON CONFLICT DO UPDATE` of database.py:52-73) in two jobs:
+    *
+    *  1. [[Pin.pinKeyed]] pins the batch, and its job returns the
+    *     batch's key tuples. A non-null key tuple present twice is
+    *     refused, naming the key, before anything is written, as a bulk
+    *     `ON CONFLICT DO UPDATE` refuses to touch one row twice.
+    *  2. The write of the new generation. The live table is read with
+    *     the schema Spark wrote into its own parquet footer, so no
+    *     schema-inference job runs. It keeps every row with a null key
+    *     field or a key tuple outside the batch's set (a literal `IN`
+    *     filter with the anti-join's null semantics), unioned by name
+    *     with the batch, so a schema mismatch fails in `unionByName`.
+    *     The result is written as one file per
+    *     `spark.sql.files.maxPartitionBytes` of table bytes on disk plus
+    *     batch bytes stored, and swapped in by [[checkedSwapInto]].
+    *
+    * A first write takes the same path with no table. A `created_at`
+    * column that both sides carry keeps the table row's value for the
+    * batch's own keys, which adds a join. The pin is released whether
+    * or not the swap happened. The batch's key set is held on the
+    * driver, so it must fit in driver memory: the same bound as a merge
+    * that broadcasts the batch's keys to every task. */
+  def upsert(spark: SparkSession, tablePath: String, incoming: DataFrame,
+      keys: Seq[String]): Unit = {
+    val live = liveGeneration(spark, tablePath)
+    val batch = Pin.pinKeyed(incoming, keys)
+    try {
+      refuseRepeatedKeys(tablePath, keys, batch.keys)
+      val (merged, tableBytes) =
+        if (!live) (batch.frame, 0L)
+        else {
+          val (table, bytes) = readGeneration(spark, tablePath)
+          val owned = ownedBy(keys, batch.keys, StructType(keys.map(batch.frame.schema(_))))
+          (table.filter(!owned).unionByName(withPreserved(table.filter(owned),
+            batch.frame, keys, preserve = Seq("created_at"))), bytes)
+        }
+      val split = spark.sessionState.conf.filesMaxPartitionBytes
+      val files = math.max(1L, (tableBytes + batch.storedBytes + split - 1) / split)
+      val tmp = tablePath + ".tmp"
+      merged.coalesce(files.toInt).write.mode("overwrite").parquet(tmp)
+      checkedSwapInto(spark, tablePath, tmp)
+    } finally Pin.release(batch.frame)
+  }
+
+  private def refuseRepeatedKeys(tablePath: String, keys: Seq[String],
+      tuples: Seq[Row]): Unit = {
+    val seen = mutable.HashSet.empty[Row]
+    tuples.find(!seen.add(_)).foreach { t =>
+      throw new IllegalArgumentException(
+        s"batch for $tablePath carries key " +
+          keys.zip(t.toSeq).map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")") +
+          " more than once")
+    }
+  }
+
+  /** True on a row whose key fields are all non-null and whose key tuple
+    * is one of `tuples` (of type `keyType`); false on every other row. */
+  private def ownedBy(keys: Seq[String], tuples: Seq[Row], keyType: StructType): Column = {
+    val member =
+      if (tuples.isEmpty) lit(false)
+      else if (keys.size == 1) col(keys.head).isInCollection(tuples.map(_.get(0)))
+      else struct(keys.map(col): _*)
+        .isInCollection(tuples.map(ColumnBridge.literal(_, keyType)))
+    keys.map(col(_).isNotNull).reduce(_ && _) && member
+  }
+
+  /** The live generation at `tablePath`, read with [[footerSchema]] of
+    * its first part file, and the bytes its part files hold. */
+  private def readGeneration(spark: SparkSession, tablePath: String): (DataFrame, Long) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(tablePath)
+    val parts = dir.getFileSystem(conf).listStatus(dir)
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      .sortBy(_.getPath.getName)
+    val reader = parts.headOption.flatMap(f => footerSchema(conf, f.getPath))
+      .fold(spark.read)(spark.read.schema(_))
+    (reader.parquet(tablePath), parts.map(_.getLen).sum)
+  }
+
+  /** The row schema Spark wrote into the footer of the parquet file
+    * `file` (key `org.apache.spark.sql.parquet.row.metadata`), made
+    * nullable as Spark's own read reports it, or None for a file written
+    * without it. */
+  private[graft] def footerSchema(conf: Configuration, file: Path): Option[StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(json => ColumnBridge.asNullable(DataType.fromJson(json).asInstanceOf[StructType]))
+    finally reader.close()
+  }
+
+  /** Checked tmp→live directory swap for parquet table generations, the
+    * one rename protocol of the warehouse ([[upsert]] and [[compact]]).
     * `tmpPath` (a fully-written new generation) replaces `tablePath`,
     * parking the previous generation at `tablePath + ".old"`. Every FS
     * step is CHECKED: the unchecked `java.io.File` spelling silently lost
@@ -32,15 +136,14 @@ object Warehouse {
     * rename/delete report failure by returning false — raise instead of
     * eating data. A process killed between the two renames leaves the
     * previous generation at `.old`; [[liveGeneration]] renames it back
-    * before the next merge reads. Single-FS local semantics; an
+    * before the next writer reads. Single-FS local semantics; an
     * object-store deployment would version the table instead of
     * renaming. */
-  def checkedSwapInto(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, tmpPath: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
-    val tmp = new org.apache.hadoop.fs.Path(tmpPath)
+  private def checkedSwapInto(spark: SparkSession, tablePath: String, tmpPath: String): Unit = {
+    val hPath = new Path(tablePath)
+    val tmp = new Path(tmpPath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = new org.apache.hadoop.fs.Path(tablePath + ".old")
+    val old = new Path(tablePath + ".old")
     if (fs.exists(old) && !fs.delete(old, true))
       throw new IllegalStateException(s"could not clear $old")
     if (fs.exists(hPath) && !fs.rename(hPath, old))
@@ -61,11 +164,10 @@ object Warehouse {
     * caller reads; otherwise the next batch would be written as the
     * whole table and its swap would delete the only copy of the old
     * rows. */
-  def liveGeneration(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
+  private def liveGeneration(spark: SparkSession, tablePath: String): Boolean = {
+    val hPath = new Path(tablePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = new org.apache.hadoop.fs.Path(tablePath + ".old")
+    val old = new Path(tablePath + ".old")
     if (!fs.exists(hPath) && fs.exists(old) && !fs.rename(old, hPath))
       throw new IllegalStateException(
         s"could not restore the previous generation from $old")
@@ -83,7 +185,7 @@ object Warehouse {
   /** `incoming` with each column of `preserve` that both sides carry
     * taken from the `existing` row of the same key, where there is one.
     * Without such a column, `incoming` itself. */
-  def withPreserved(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
+  private def withPreserved(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
       preserve: Seq[String]): DataFrame = {
     val pres = preserve.filter(c => existing.columns.contains(c) && incoming.columns.contains(c))
     if (pres.isEmpty) incoming
@@ -224,14 +326,13 @@ object Warehouse {
 
   /** Compact a parquet table directory's files into ≈`targetBytes`
     * outputs. Small-file proliferation is the silent warehouse killer
-    * at 100 TB: every per-batch merge/append ([[graft.streaming
-    * .EventPipeline.mergeBatchSink]], streaming ingest) leaves another
-    * file generation behind, downstream scans pay per-file open+footer
-    * cost, and eventually the LISTING is the bottleneck. Compaction
-    * rewrites the same rows into size-targeted files; output count
-    * derives from the actual on-disk footprint (parquet→parquet keeps
-    * roughly the input compression ratio), so the op self-tunes as the
-    * table grows.
+    * at 100 TB: a table written by appends (the streaming corpus sinks)
+    * leaves another file generation behind per batch, downstream scans
+    * pay per-file open+footer cost, and eventually the LISTING is the
+    * bottleneck. Compaction rewrites the same rows into size-targeted
+    * files; output count derives from the actual on-disk footprint
+    * (parquet→parquet keeps roughly the input compression ratio), so
+    * the op self-tunes as the table grows.
     *
     * `sortCol`: compaction is exactly the moment to (re)establish
     * intra-file clustering — pass the z-order key from
@@ -242,27 +343,29 @@ object Warehouse {
     * partitions without a shuffle and inherits their skew — even file
     * sizes are the point of the exercise).
     *
-    * Loss-proof by construction: input rows are counted ON the write
-    * job (`observe` — no extra scan), the written output is counted
-    * from parquet metadata, the part listing is re-checked against the
+    * Loss-proof by construction: an interrupted swap is finished first
+    * ([[liveGeneration]]), input rows are counted ON the write job
+    * (`observe` — no extra scan), the written output is counted from
+    * parquet metadata, and the part listing is re-checked against the
     * entry snapshot (a CONCURRENT append would otherwise ride into the
     * discarded generation unseen by the row proof — single-writer is
-    * the contract, and violating it aborts loudly), and every rename's
-    * boolean result is checked (Hadoop reports failure by returning
-    * false; an unchecked swap could delete the only live generation).
-    * Only then is the pre-compaction generation deleted — keeping a
-    * second copy of a table-sized directory is the one thing a
-    * compactor of small-file bloat must not do. Between the two renames
-    * the table is briefly absent (single-FS batch semantics; a failed
-    * second rename rolls back).
+    * the contract, and violating it aborts loudly). Only then is the
+    * new generation swapped in from `tablePath + ".tmp"` by
+    * [[checkedSwapInto]], the same rename protocol as [[upsert]], so a
+    * compaction killed between its renames is recovered by the next
+    * writer. The pre-compaction generation it parks at `.old` is then
+    * deleted — keeping a second copy of a table-sized directory is the
+    * one thing a compactor of small-file bloat must not do.
     * Returns (filesBefore, filesAfter). */
-  def compact(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  def compact(spark: SparkSession, tablePath: String,
       targetBytes: Long, sortCol: Option[String] = None): (Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
+    require(liveGeneration(spark, tablePath), s"no table at $tablePath")
+    val hPath = new Path(tablePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(hPath).filter(s =>
+    def partFiles(dir: Path) = fs.listStatus(dir).filter(s =>
       s.isFile && s.getPath.getName.startsWith("part-"))
+    val parts = partFiles(hPath)
     require(parts.nonEmpty, s"no part files to compact under $tablePath")
     val totalBytes = parts.map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
@@ -273,7 +376,7 @@ object Warehouse {
       case None => data.repartition(nOut)
     }
     val obs = org.apache.spark.sql.Observation()
-    val tmpPath = new org.apache.hadoop.fs.Path(tablePath + ".compact-tmp")
+    val tmpPath = new Path(tablePath + ".tmp")
     def abort(reason: String): Nothing = {
       fs.delete(tmpPath, true)
       throw new IllegalStateException(s"$reason — aborted, $tablePath untouched")
@@ -285,35 +388,17 @@ object Warehouse {
     if (inRows != outRows)
       abort(s"compaction wrote $outRows rows for $inRows inputs")
     // single-writer check: a part file appended AFTER the snapshot read
-    // (a concurrent mergeBatchSink/ingest batch) would ride into the old
+    // (a concurrent upsert or append) would ride into the old
     // generation and be deleted — its rows are in neither count, so the
     // row proof above cannot see it. Abort loudly instead of losing it;
     // compaction belongs in the ingest quiet window.
-    val partsNow = fs.listStatus(hPath).filter(s =>
-      s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => (s.getPath.getName, s.getLen)).sortBy(_._1).toSeq
-    if (partsNow != parts.map(s => (s.getPath.getName, s.getLen)).sortBy(_._1).toSeq)
+    def listing(ps: Array[FileStatus]) =
+      ps.map(s => (s.getPath.getName, s.getLen)).sortBy(_._1).toSeq
+    if (listing(partFiles(hPath)) != listing(parts))
       abort("table changed during compaction (concurrent writer?)")
-    val outFiles = fs.listStatus(tmpPath)
-      .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    // Hadoop rename reports failure by RETURNING FALSE, not throwing —
-    // an unchecked swap could delete the only live generation. Between
-    // the two renames the table is briefly absent (single-FS batch
-    // semantics; snapshot-isolated formats commit via metadata instead);
-    // a failed second rename rolls the original back.
-    val old = new org.apache.hadoop.fs.Path(tablePath + ".compact-old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(hPath, old))
-      abort(s"could not move $tablePath aside")
-    if (!fs.rename(tmpPath, hPath)) {
-      val rolledBack = fs.rename(old, hPath)
-      fs.delete(tmpPath, true)
-      throw new IllegalStateException(
-        s"could not move compacted data into $tablePath — " +
-          (if (rolledBack) "original restored"
-           else s"ROLLBACK FAILED, original is at $old"))
-    }
-    fs.delete(old, true)
+    val outFiles = partFiles(tmpPath).length
+    checkedSwapInto(spark, tablePath, tmpPath.toString)
+    fs.delete(new Path(tablePath + ".old"), true)
     (parts.length, outFiles)
   }
 

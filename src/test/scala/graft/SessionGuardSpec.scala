@@ -18,6 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `Pin.release` instead of diffing the BlockManager's persisted-RDD
   *    map or remembering a previous call's blocks, and an aligned pin
   *    declares its layout instead of switching AQE off session-wide.
+  *  - a table generation is swapped in by one rename protocol, in
+  *    [[graft.warehouse.Warehouse]]: no other file renames a directory
+  *    or writes a generation of its own.
   *
   * In `src/test/scala`, only [[Surface]] and QueriesSpec build every
   * query: a plan gate reads the one sweep in [[Surface]]. Patterns match
@@ -52,6 +55,10 @@ class SessionGuardSpec extends AnyFunSuite {
       "no conf is flipped and restored, so none needs its explicitness read"),
     Guard("a session lock", "(?i)\\bsess\\w*\\.synchronized|session\\.synchronized", Nil,
       "pinning takes no session-wide lock"),
+    Guard("checkedSwapInto", "checkedSwapInto", Seq("graft/warehouse/Warehouse.scala"),
+      "write a table generation with Warehouse.upsert or Warehouse.compact"),
+    Guard("a Hadoop rename", "\\.rename\\(", Seq("graft/warehouse/Warehouse.scala"),
+      "swap a table generation in through Warehouse.upsert or Warehouse.compact"),
     Guard("building every query of SparkEntry.queries",
       s"(?s)$iteratesQueries(?=.*$buildsQuery)|$buildsQuery(?=.*$iteratesQueries)",
       Seq("graft/Surface.scala", "graft/QueriesSpec.scala"),

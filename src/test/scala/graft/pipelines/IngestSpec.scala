@@ -17,9 +17,10 @@ import graft.SparkTestBase
 import graft.ops.Pin
 import graft.warehouse.Warehouse
 
-/** `CivicPipeline.ingest` against the lazy operator it replaces on the
-  * civic path: whatever generation `ingest` leaves must be the rows of
-  * `Warehouse.mergeByKey` over the same table and batch. */
+/** `Warehouse.upsert`, the writer behind the civic ingest and the stream
+  * sinks, against the lazy operator it replaces there: whatever
+  * generation `upsert` leaves must be the rows of `Warehouse.mergeByKey`
+  * over the same table and batch. */
 class IngestSpec extends SparkTestBase {
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
@@ -39,7 +40,7 @@ class IngestSpec extends SparkTestBase {
     val incoming = spark.createDataFrame(spark.sparkContext.parallelize(batch, 3), schema)
     val want = sorted(Warehouse.mergeByKey(spark.read.parquet(path), incoming, keys,
       preserve = Seq("created_at")))
-    CivicPipeline.ingest(spark, path, incoming, keys)
+    Warehouse.upsert(spark, path, incoming, keys)
     assert(sorted(spark.read.parquet(path)) == want, s"keys $keys, batch $batch")
   }
 
@@ -86,7 +87,7 @@ class IngestSpec extends SparkTestBase {
     val batch = Seq(Row("p1", "a1", 10, t(10)), Row("p2", "a1", 20, t(20)),
       Row("p2", null, 30, t(30)))
     val path = freshTable(table, schema)
-    CivicPipeline.ingest(spark, path,
+    Warehouse.upsert(spark, path,
       spark.createDataFrame(spark.sparkContext.parallelize(batch, 1), schema),
       Seq("person_id", "area_id"))
     assert(sorted(spark.read.parquet(path)) == Seq(
@@ -111,7 +112,7 @@ class IngestSpec extends SparkTestBase {
     val conf = spark.sessionState.newHadoopConf()
     val part = new java.io.File(path).listFiles().filter(_.getName.startsWith("part-"))
       .map(f => new Path(f.getPath)).head
-    val footer = CivicPipeline.footerSchema(conf, part)
+    val footer = Warehouse.footerSchema(conf, part)
     assert(footer == Some(spark.read.parquet(path).schema), footer)
     assert(footer.map(spark.read.schema(_).parquet(path).schema) == footer)
   }
@@ -128,9 +129,9 @@ class IngestSpec extends SparkTestBase {
     try Seq("a" -> 1, "b" -> 2).foreach { case (k, v) =>
       writer.write(groups.newGroup().append("id", k).append("v", v))
     } finally writer.close()
-    assert(CivicPipeline.footerSchema(conf, file).isEmpty)
+    assert(Warehouse.footerSchema(conf, file).isEmpty)
     import spark.implicits._
-    CivicPipeline.ingest(spark, path, Seq(("b", 20), ("c", 30)).toDF("id", "v"), Seq("id"))
+    Warehouse.upsert(spark, path, Seq(("b", 20), ("c", 30)).toDF("id", "v"), Seq("id"))
     assert(spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getInt(1)).toMap ==
       Map("a" -> 1, "b" -> 20, "c" -> 30))
   }
@@ -143,7 +144,7 @@ class IngestSpec extends SparkTestBase {
     val batch = rowsOf(rnd, keyed(rnd, 12, 2, 6), stamped = false)
     def ingested(): Seq[String] = {
       val path = freshTable(table, schema)
-      CivicPipeline.ingest(spark, path,
+      Warehouse.upsert(spark, path,
         spark.createDataFrame(spark.sparkContext.parallelize(batch, 3), schema), keys)
       sorted(spark.read.parquet(path))
     }

@@ -3,6 +3,7 @@ package graft.pipelines
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{GenerateExec, LogicalRDD}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
@@ -16,6 +17,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.geo.{GeoFunctions, GeoJson}
 import graft.ops.QueryMetrics
+import graft.streaming.EventPipeline
 
 /** End-to-end pipeline tests over reference-shaped fixtures (SURVEY §3,
   * FIXTURES.md) — the Spark analog of the reference's only executable
@@ -690,16 +692,22 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("ingest upserts a built batch into a table in two jobs and one file") {
-    val tbl = Files.createTempDirectory("wh").toString + "/areas"
-    // a table of four files, and a batch built from a local relation
-    (0 until 40).map(i => (s"k$i", i)).toDF("id", "v").repartition(4).write.parquet(tbl)
-    val batch = (30 until 50).map(i => (s"k$i", -i)).toDF("id", "v")
-    val (_, rec) = QueryMetrics.capture(spark)(CivicPipeline.ingest(spark, tbl, batch, Seq("id")))
-    assert(rec.jobs.size == 2, rec.jobs.map(_.callSite))
-    val parts = new java.io.File(tbl).list().filter(_.startsWith("part-"))
-    assert(parts.length == 1, parts.toSeq)
-    val fin = spark.read.parquet(tbl).collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(fin == (0 until 50).map(i => s"k$i" -> (if (i < 30) i else -i)).toMap)
+    // the civic ingest and the stream's micro-batch sink
+    val writers = Seq[(String, (String, DataFrame) => Unit)](
+      "ingest" -> ((tbl, batch) => CivicPipeline.ingest(spark, tbl, batch, Seq("id"))),
+      "mergeBatchSink" -> ((tbl, batch) => EventPipeline.mergeBatchSink(tbl, Seq("id"))(batch, 0)))
+    for ((name, write) <- writers) {
+      val tbl = Files.createTempDirectory("wh").toString + "/areas"
+      // a table of four files, and a batch built from a local relation
+      (0 until 40).map(i => (s"k$i", i)).toDF("id", "v").repartition(4).write.parquet(tbl)
+      val batch = (30 until 50).map(i => (s"k$i", -i)).toDF("id", "v")
+      val (_, rec) = QueryMetrics.capture(spark)(write(tbl, batch))
+      assert(rec.jobs.size == 2, s"$name: ${rec.jobs.map(_.callSite)}")
+      val parts = new java.io.File(tbl).list().filter(_.startsWith("part-"))
+      assert(parts.length == 1, s"$name: ${parts.toSeq}")
+      val fin = spark.read.parquet(tbl).collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(fin == (0 until 50).map(i => s"k$i" -> (if (i < 30) i else -i)).toMap, name)
+    }
   }
 
   // q219 resource contract: repeated summary() calls in one JVM must

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkTestBase
 import graft.warehouse.Warehouse
@@ -85,6 +86,36 @@ class StreamingSpec extends SparkTestBase {
     assert(out == Seq((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  test("foreachBatch merge sink refuses a micro-batch that repeats a key, on replay too") {
+    implicit val sql = spark.sqlContext
+    val root = Files.createTempDirectory("mergesink").toString
+    val dir = root + "/tbl"
+    val stream = MemoryStream[(Long, String)]
+    def start() = stream.toDF().toDF("id", "v").writeStream
+      .option("checkpointLocation", root + "/ckpt")
+      .foreachBatch(EventPipeline.mergeBatchSink(dir, Seq("id")) _)
+      .start()
+    def generation() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    def refusal(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i.getMessage }
+    val blockSets = spark.sparkContext.getPersistentRDDs.keySet
+    val q = start()
+    stream.addData((1L, "a"), (2L, "b"))
+    q.processAllAvailable()
+    val first = generation()
+    assert(first == Seq("[1,a]", "[2,b]"), first)
+    stream.addData((3L, "c"), (2L, "B"), (2L, "BB"))
+    val e = intercept[StreamingQueryException](q.processAllAvailable())
+    assert(refusal(e).exists(_.contains("(id=2)")), e)
+    // a restart replays the refused batch from the checkpoint: refused again
+    val replay = start()
+    val again = intercept[StreamingQueryException](replay.processAllAvailable())
+    assert(refusal(again).exists(_.contains("(id=2)")), again)
+    assert(generation() == first, "the refused batch changed the table")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == blockSets,
+      "the refused batch left a block set behind")
+  }
+
   test("stream-static enrichment picks up a dimension refresh between micro-batches") {
     implicit val sql = spark.sqlContext
     val base = Files.createTempDirectory("enrich").toString
@@ -120,32 +151,36 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming dedup ingest rejects near-dups of earlier batches") {
     implicit val sql = spark.sqlContext
-    val dir = Files.createTempDirectory("dedupingest").toString + "/corpus"
     def doc(words: Seq[String]) = words.mkString(" ")
     val base = (0 until 20).map(i => s"w$i")
     val alt = (0 until 20).map(i => s"x$i")
-    val stream = MemoryStream[(Long, String)]
-    val q = stream.toDF().toDF("doc_id", "text")
-      .writeStream.outputMode("append")
-      .foreachBatch(EventPipeline.dedupIngestSink(dir, "doc_id", "text") _)
-      .start()
-    // batch 0: two distinct docs + an in-batch near-copy of the first
-    stream.addData(Seq(
-      (1L, doc(base)),
-      (2L, doc(alt)),
-      (3L, doc(base.updated(0, "CHANGED"))))) // near-dup of 1 within the batch
-    q.processAllAvailable()
-    // batch 1: near-copy of a batch-0 survivor + one genuinely new doc
-    stream.addData(Seq(
-      (4L, doc(base.updated(19, "EDIT"))), // near-dup of ingested doc 1
-      (5L, doc((0 until 20).map(i => s"z$i")))))
-    q.processAllAvailable()
-    q.stop()
-    val ingested = spark.read.parquet(dir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(ingested.contains(1L) && ingested.contains(2L) && ingested.contains(5L))
-    assert(!ingested.contains(3L), "in-batch near-dup must be rejected")
-    assert(!ingested.contains(4L), "cross-batch near-dup must be rejected")
+    // a plain path and a file: URI, which a java.io.File check misses
+    val plain = Files.createTempDirectory("dedupingest").toString + "/corpus"
+    val uri = "file://" + Files.createTempDirectory("dedupingest").toString + "/corpus"
+    for (dir <- Seq(plain, uri)) {
+      val stream = MemoryStream[(Long, String)]
+      val q = stream.toDF().toDF("doc_id", "text")
+        .writeStream.outputMode("append")
+        .foreachBatch(EventPipeline.dedupIngestSink(dir, "doc_id", "text") _)
+        .start()
+      // batch 0: two distinct docs + an in-batch near-copy of the first
+      stream.addData(Seq(
+        (1L, doc(base)),
+        (2L, doc(alt)),
+        (3L, doc(base.updated(0, "CHANGED"))))) // near-dup of 1 within the batch
+      q.processAllAvailable()
+      // batch 1: near-copy of a batch-0 survivor + one genuinely new doc
+      stream.addData(Seq(
+        (4L, doc(base.updated(19, "EDIT"))), // near-dup of ingested doc 1
+        (5L, doc((0 until 20).map(i => s"z$i")))))
+      q.processAllAvailable()
+      q.stop()
+      val ingested = spark.read.parquet(dir)
+        .select("doc_id").as[Long].collect().toSet
+      assert(ingested.contains(1L) && ingested.contains(2L) && ingested.contains(5L), dir)
+      assert(!ingested.contains(3L), s"in-batch near-dup must be rejected: $dir")
+      assert(!ingested.contains(4L), s"cross-batch near-dup must be rejected: $dir")
+    }
   }
 
   test("streaming embedding ingest rejects semantic near-dups of earlier batches") {

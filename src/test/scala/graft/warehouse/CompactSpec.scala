@@ -24,8 +24,9 @@ class CompactSpec extends SparkTestBase {
     val after = spark.read.parquet(dir).collect().map(_.getLong(0)).sorted.toSeq
     assert(after == before, "compaction changed the row set")
     // the generation dirs are gone — no doubled storage, no stray tmp
-    assert(!new java.io.File(dir + ".compact-old").exists())
-    assert(!new java.io.File(dir + ".compact-tmp").exists())
+    val left = Seq(".old", ".tmp", ".compact-old", ".compact-tmp")
+      .filter(s => new java.io.File(dir + s).exists())
+    assert(left.isEmpty, s"compaction left $left behind")
   }
 
   test("compact with sortCol restores per-file min/max pruning locality") {
@@ -63,5 +64,38 @@ class CompactSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException](
       Warehouse.compact(spark, empty, 1L << 20))
     assert(e.getMessage.contains("no part files"), e.getMessage)
+  }
+
+  /** A table under the `crashfs` scheme ([[CrashingRenameFs]]). */
+  private def crashDir(): String = {
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashingRenameFs].getName)
+    "crashfs://" + freshDir()
+  }
+
+  private def rows(dir: String): Map[Long, String] =
+    spark.read.parquet(dir).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  /** Run `body` with the `n`th table-swap rename throwing. */
+  private def killedAtRename(n: Int)(body: => Unit): Unit = {
+    CrashingRenameFs.failAt(n)
+    try intercept[java.io.IOException](body)
+    finally CrashingRenameFs.failAt(0)
+  }
+
+  test("a compaction or upsert killed between its renames loses no row to the next upsert") {
+    val table = (1L to 200L).map(i => i -> s"v$i")
+    val writers = Seq[(String, String => Unit)](
+      "compact" -> (dir => Warehouse.compact(spark, dir, targetBytes = 1L << 30)),
+      "upsert" -> (dir => Warehouse.upsert(spark, dir, Seq((1L, "lost")).toDF("id", "v"), Seq("id"))))
+    for ((name, write) <- writers) {
+      val dir = crashDir()
+      Warehouse.upsert(spark, dir, table.toDF("id", "v"), Seq("id"))
+      // a second generation, so the killed swap also has an .old to clear
+      Warehouse.upsert(spark, dir, Seq((201L, "w")).toDF("id", "v"), Seq("id"))
+      // the table moved aside, the new generation not yet in place
+      killedAtRename(2)(write(dir))
+      Warehouse.upsert(spark, dir, Seq((5L, "new"), (300L, "x")).toDF("id", "v"), Seq("id"))
+      assert(rows(dir) == table.toMap ++ Map(201L -> "w", 5L -> "new", 300L -> "x"), name)
+    }
   }
 }

@@ -161,8 +161,13 @@ stream)
   # state reloads from the checkpoint files, and the batch-id-keyed merge
   # sink must come out byte-identical to an unkilled run (exactly-once
   # under executor loss, not just across restarts). Kill placed by
-  # micro-batch count. No localCheckpoint negative control here:
-  # streaming state durability doesn't ride graft.ops.Pin.
+  # micro-batch count, on a batch's progress event. Keyed state rides
+  # the RocksDB checkpoint, not graft.ops.Pin, so there is no
+  # localCheckpoint negative control. The sink (Warehouse.upsert) does
+  # pin each micro-batch between its two jobs: a kill landing between a
+  # batch's pin job and its write would lose those blocks and fail the
+  # run (reliable mode, as in the civic leg, would not). Three
+  # local-cluster[2,2,1024] runs survived bit-identical.
   echo "== streaming funnel (must survive the kill, sink exactly-once) =="
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   SPARK_GRAFT_MASTER="$MASTER" \
